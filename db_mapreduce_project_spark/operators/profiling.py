@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.stable import duck_qavg, duck_qint, qavg, qint
+from ..functions.text import normalize_word, tokenize_line
 from ..io import load_table
 from ..registry import register
 
@@ -191,12 +192,11 @@ def drift_chisq_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast back — vocabulary-sized), per-source totals broadcast
     as a second tiny dim; the corpus scans once."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", F.explode(F.split("text", " ", -1)).alias("raw")
-    ).select(
-        "source",
-        F.lower(F.regexp_replace("raw", "[^a-zA-Z]", "")).alias("word"),
-    ).where(F.col("word") != "")
+    toks = (
+        d.select("source", F.explode(tokenize_line("text")).alias("raw"))
+        .select("source", normalize_word("raw").alias("word"))
+        .where(F.col("word") != "")
+    )
     obs = toks.groupBy("source", "word").agg(F.count("*").alias("obs"))
     corpus = obs.groupBy("word").agg(F.sum("obs").alias("corpus_w"))
     src_tot = obs.groupBy("source").agg(F.sum("obs").alias("n_source"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import words
+from ..functions.text import normalize_word, tokenize_line, words
 from ..io import load_table
 from ..registry import register
 
@@ -102,13 +102,8 @@ def wordcount_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises explode-with-key + two-level aggregation."""
     docs = load_table(spark, sf_dir, "documents")
     toks = (
-        docs.select(
-            "doc_id", F.explode(F.split("text", " ", -1)).alias("raw")
-        )
-        .select(
-            "doc_id",
-            F.lower(F.regexp_replace("raw", "[^a-zA-Z]", "")).alias("word"),
-        )
+        docs.select("doc_id", F.explode(tokenize_line("text")).alias("raw"))
+        .select("doc_id", normalize_word("raw").alias("word"))
         .where(F.col("word") != "")
     )
     return (

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.stable import duck_qsum, qavg, qsum
+from ..functions.text import normalize_word, tokenize_line
 from ..io import load_table
 from ..registry import register
 
@@ -618,9 +619,9 @@ def stream_wordcount(
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    toks = docs.select(
-        F.explode(F.split("text", " ", -1)).alias("raw")
-    ).select(F.lower(F.regexp_replace("raw", "[^a-zA-Z]", "")).alias("word"))
+    toks = docs.select(F.explode(tokenize_line("text")).alias("raw")).select(
+        normalize_word("raw").alias("word")
+    )
     agg = (
         toks.where(F.col("word") != "")
         .groupBy("word")

@@ -54,9 +54,14 @@ def test_q1_column_pruning(spark):
 def test_wordcount_shuffle_budget(spark):
     """The flagship plan: ONE hash shuffle for the aggregate plus
     ONE range shuffle for the ordered sink — exactly the reference's
-    merge+reduce structure, nothing more."""
+    merge+reduce structure, nothing more.  Tokenizing is one Arrow
+    kernel (one MapInArrow node), not an explode (Generate) feeding
+    per-token Catalyst expressions."""
     df = registry.QUERIES["wordcount"](spark, SF)
     assert count_exchanges(df) <= 2
+    plan = physical_plan(df)
+    assert len(re.findall(r"\(\d+\) MapInArrow\b", plan)) == 1
+    assert not re.search(r"\(\d+\) Generate\b", plan)
 
 
 def test_filter_project_stays_codegen(spark):

@@ -6,6 +6,7 @@ trailing spaces) and asserts exact (word, cnt) output, ascending
 ASCII order, and the distinct-key count the reference prints
 (maprdeuce.cpp:1403-1427)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from db_mapreduce_project_spark.functions.text import normalize_word, words
@@ -84,6 +85,44 @@ def test_empty_input_emits_zero_rows(spark):
         .collect()
     )
     assert out2 == []
+
+
+# Invalid and non-ASCII UTF-8 read straight from a file: a stray
+# continuation byte, a truncated 3-byte sequence and an encoded
+# surrogate.  The contract is byte-level (the reference's
+# removePunctuation): every byte outside [a-zA-Z] is deleted.
+INVALID_UTF8 = b"ab\xffcd ef\nCaf\xc3\xa9 x\xe2\x82\n\xed\xa0\x80z Q\n"
+INVALID_UTF8_WORDS = {"abcd": 1, "caf": 1, "ef": 1, "q": 1, "x": 1, "z": 1}
+
+
+def _counts(df):
+    out = words(df, "value").groupBy("word").agg(F.count("*").alias("cnt"))
+    return {r["word"]: r["cnt"] for r in out.collect()}
+
+
+@pytest.fixture(params=[None, "2"], ids=["default_batch", "batch2"])
+def arrow_batch(spark, request):
+    """Runs a test at the default Arrow batch size and at 2 rows per
+    batch, which puts a batch boundary inside every multi-line input:
+    the result must not depend on where the boundaries fall."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if request.param:
+        spark.conf.set(key, request.param)
+    yield
+    spark.conf.set(key, old)
+
+
+def test_invalid_utf8_is_deleted_bytewise(spark, tmp_path, arrow_batch):
+    path = tmp_path / "invalid_utf8.txt"
+    path.write_bytes(INVALID_UTF8)
+    assert _counts(spark.read.text(str(path))) == INVALID_UTF8_WORDS
+
+
+def test_null_line_yields_no_tokens(spark, arrow_batch):
+    lines = HAZARD_LINES + [None, "Null above"]
+    df = spark.createDataFrame([(s,) for s in lines], "value string")
+    assert _counts(df.repartition(1)) == dict(EXPECTED, null=1, above=1)
 
 
 def test_normalize_word_edge_cases(spark):
