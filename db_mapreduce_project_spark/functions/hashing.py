@@ -1,11 +1,12 @@
 """Hash-based sketch primitives: shingling, MinHash signatures,
 SimHash, rolling-hash fingerprints.
 
-All built from Catalyst expressions (xxhash64, bit ops, HOFs) —
-JVM-side, shuffle-friendly, no Python in the hot path.  These are
-the scale path for near-duplicate detection: signatures are fixed
-width regardless of document size, and LSH banding turns the O(n^2)
-pair search into an equi-join on (band, band_hash).
+All built from Catalyst expressions (polynomial rolling hashes,
+bit ops, HOFs) — JVM-side, shuffle-friendly, no Python in the hot
+path.  These are the scale path for near-duplicate detection:
+signatures are fixed width regardless of document size, and LSH
+banding turns the O(n^2) pair search into an equi-join on (band,
+band_hash).
 
 Published sources: MinHash resemblance sketches (Broder, "On the
 resemblance and containment of documents", SEQUENCES 1997); the
@@ -104,105 +105,14 @@ def word_shingles(
     )
 
 
-# Double-hashing parameters: h_i = (h1 mod P61) + i * (h2 mod 2^57).
-# Max value: (2^61 - 2) + 31 * (2^57 - 1) < 2^63 — no int64 overflow
-# even under ANSI arithmetic.
-_MH_P61 = (1 << 61) - 1
-_MH_P57 = 1 << 57
-
-
-def minhash_signature(
-    shingles: DataFrame,
-    id_col: str,
-    num_hashes: int = 32,
-    shingle_col: str = "shingle",
-) -> DataFrame:
-    """MinHash signature via double hashing (Kirsch–Mitzenmacher):
-    two base hashes per shingle, permutation i is the linear combo
-    (h1 + i*h2) mod p — same min-wise independence class as
-    num_hashes separate hash functions at 1/16th the hashing cost.
-    One shuffle (groupBy id), num_hashes parallel min-aggregates
-    over fused multiply-adds.  Works on string shingles or their
-    64-bit hashes (hash-of-hash keeps the min-wise property).
-
-    The mod-p wrap is LOAD-BEARING, not hygiene: without it the
-    argmin of h1 + i*h2 for growing i collapses to the argmin of
-    h2 alone, so the 32 "permutations" are near-copies of one —
-    measured on the sf0.1 fixture this silently cost 5/256
-    containment pairs at Jaccard 0.92-0.99, pairs that should miss
-    8 bands with probability ~1e-18.  Intermediate h1 + i*h2 is
-    < 2^63 by the parameter choice below, so the wrap is exact
-    under ANSI arithmetic."""
-    h1 = F.pmod(F.xxhash64(F.col(shingle_col), F.lit(0)), F.lit(_MH_P61))
-    h2 = F.pmod(F.xxhash64(F.col(shingle_col), F.lit(1)), F.lit(_MH_P57))
-    base = shingles.select(
-        F.col(id_col), h1.alias("_h1"), h2.alias("_h2")
-    )
-    aggs = [
-        F.min(
-            F.pmod(F.col("_h1") + F.lit(i) * F.col("_h2"), F.lit(_MH_P61))
-        ).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return base.groupBy(id_col).agg(*aggs)
-
-
-def lsh_bands(
-    sig: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """Band the signature: rows/band = num_hashes/bands; band key =
-    xxhash64 of that band's minhashes.  Output (id, band, band_hash)
-    — candidate pairs share (band, band_hash)."""
-    rows = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows + r}") for r in range(rows)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("band_hash"))
-        )
-    # no distinct: one signature row per id -> (id, band) pairs are
-    # unique by construction; a distinct here would be a wasted shuffle
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bh")
-    ).select(id_col, F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash"))
-
-
-def minhash_signature_portable(
-    shingles: DataFrame,
-    id_col: str,
-    num_hashes: int = 32,
-    shingle_col: str = "shingle",
-) -> DataFrame:
-    """Portable-hash MinHash signature: same Kirsch–Mitzenmacher
-    double hashing as :func:`minhash_signature`, but the two base
-    hashes are polynomial rolling hashes (bases 31/131, moduli
-    1e9+7/1e9+9) that DuckDB reproduces exactly — so the whole
-    LSH pipeline is oracle-checkable.  Permutation i is
-    (h1 + i*h2) mod 1e9+7 — see :func:`minhash_signature` for why
-    the mod-wrap is required for hash independence; the pre-mod
-    value is ~3.3e10, no int64 overflow.  Still one shuffle."""
-    base = shingles.select(
-        F.col(id_col), spark_charhash_pair(F.col(shingle_col)).alias("_h")
-    ).select(
-        id_col,
-        F.col("_h.h1").alias("_h1"),
-        F.col("_h.h2").alias("_h2"),
-    )
-    aggs = [
-        F.min(
-            F.pmod(F.col("_h1") + F.lit(i) * F.col("_h2"), F.lit(FP_MOD))
-        ).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return base.groupBy(id_col).agg(*aggs)
-
-
 def lsh_bands_portable(
     sig: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """Portable banding: band key = polynomial fold of that band's
     minhashes mod 1e9+7 (mirrored in SQL by :func:`duck_band_hash`).
-    Output (id, band, band_hash) like :func:`lsh_bands`."""
+    Output (id, band, band_hash): candidate pairs share (band,
+    band_hash).  No distinct: one signature row per id makes the
+    (id, band) pairs unique by construction."""
     rows = num_hashes // bands
     band_cols = []
     for b in range(bands):
@@ -230,33 +140,6 @@ def duck_band_hash(band: int, rows: int) -> str:
     return expr
 
 
-def simhash63(tokens: DataFrame, id_col: str, token_col: str = "word") -> DataFrame:
-    """63-bit SimHash per document from token frequencies.
-
-    For bit i: s_i = sum over tokens(cnt if bit i of xxhash64(token)
-    else -cnt); simhash bit i = 1 if s_i > 0.  Bits 0..62 assembled
-    into a non-negative bigint (bit 63 dropped to avoid int64
-    overflow).  One shuffle.
-    """
-    counted = tokens.groupBy(id_col, token_col).agg(F.count("*").alias("cnt"))
-    h = F.xxhash64(F.col(token_col))
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.col("cnt"))
-            .otherwise(-F.col("cnt"))
-        ).alias(f"s_{i}")
-        for i in range(63)
-    ]
-    sums = counted.groupBy(id_col).agg(*bit_sums)
-    sig = None
-    for i in range(63):
-        term = F.when(F.col(f"s_{i}") > 0, F.lit(1).cast("bigint") * (2**i)).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        sig = term if sig is None else sig + term
-    return sums.select(F.col(id_col), sig.alias("simhash"))
-
-
 def simhash60_portable(
     tokens: DataFrame, id_col: str, token_col: str = "word"
 ) -> DataFrame:
@@ -266,8 +149,9 @@ def simhash60_portable(
     60-bit value both engines compute identically (Charikar 2002
     rounding, Manku 2007 deployment; the hash family is weaker than
     xxhash64 but identical cross-engine, which is what makes the
-    signature differentially testable).  Same one-shuffle plan as
-    :func:`simhash63`."""
+    signature differentially testable).  One shuffle: bit i of the
+    signature is set when the count-weighted vote of the token
+    hashes' bit i is positive."""
     counted = (
         tokens.groupBy(id_col, token_col)
         .agg(F.count("*").alias("cnt"))
@@ -448,11 +332,20 @@ def token_shingle_hash_pairs(
 def minhash_signature_from_pairs(
     pairs: DataFrame, id_col: str, num_hashes: int = 32
 ) -> DataFrame:
-    """MinHash signature (Kirsch–Mitzenmacher double hashing,
-    (h1 + i*h2) mod 1e9+7 — the mod-wrap is required for hash
-    independence, see :func:`minhash_signature`) over precomputed
-    portable hash-pair shingles (h1, h2) — same output as
-    :func:`minhash_signature_portable` without re-hashing."""
+    """MinHash signature over precomputed portable hash-pair
+    shingles (h1, h2): Kirsch–Mitzenmacher double hashing, so
+    permutation i is (h1 + i*h2) mod 1e9+7 — the same min-wise
+    independence class as num_hashes separate hash functions at a
+    fraction of the hashing cost.  One shuffle (groupBy id),
+    num_hashes parallel min-aggregates; the pre-mod value is
+    ~3.3e10, no int64 overflow.
+
+    The mod-wrap is LOAD-BEARING, not hygiene: without it the
+    argmin of h1 + i*h2 for growing i collapses to the argmin of
+    h2 alone, so the "permutations" are near-copies of one —
+    measured on the sf0.1 fixture (with xxhash64 base hashes) this
+    silently cost 5/256 containment pairs at Jaccard 0.92-0.99,
+    pairs that should miss 8 bands with probability ~1e-18."""
     aggs = [
         F.min(
             F.pmod(F.col("h1") + F.lit(i) * F.col("h2"), F.lit(FP_MOD))

@@ -70,14 +70,3 @@ def duck_qsum(expr: str, scale: int = 2) -> str:
 
 def duck_qavg(expr: str, scale: int = 2) -> str:
     return f"({duck_qsum(expr, scale)} / count(*))"
-
-
-def duck_qsum_over(expr: str, scale: int, over: str) -> str:
-    return (
-        f"(CAST(sum({duck_qint(expr, scale)}) OVER {over} AS BIGINT)"
-        f" / {float(10 ** scale)})"
-    )
-
-
-def duck_qavg_over(expr: str, scale: int, over: str) -> str:
-    return f"({duck_qsum_over(expr, scale, over)} / count(*) OVER {over})"

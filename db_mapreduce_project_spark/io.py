@@ -69,10 +69,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view so spark.sql()
     queries can reference them by name (mirrors the driver's DuckDB

@@ -280,17 +280,6 @@ def _encode_avi_batches(
         )
 
 
-def build_avi_payloads(d: DataFrame) -> DataFrame:
-    """Assemble a real 4-frame MJPEG AVI per document from the
-    first _AVI_BODY_LEN sanitized text bytes (frame f carries the
-    64-byte window at offset f*32 — 50% overlap, temporally
-    correlated frames like video).  The source plane rides along
-    for the per-frame loss bound."""
-    return _spread(_avi_src(d)).mapInPandas(
-        _encode_avi_batches, schema="doc_id bigint, body binary, vid binary"
-    )
-
-
 def _avi_src(d: DataFrame) -> DataFrame:
     body = _ascii_body(_AVI_BODY_LEN)
     return d.select("doc_id", F.encode(body, "UTF-8").alias("body"))

@@ -121,8 +121,8 @@ def _set_fingerprint(df: DataFrame, c1: str, c2: str) -> tuple:
     under ANSI mode, unlike sum).  Equal fingerprints across rounds
     signal convergence.  CALLERS MUST re-verify the loop exit with
     an exact check (exceptAll / join-diff) so a hash collision can
-    never return a wrong answer — shared by both connected-
-    components algorithms so the invariants stay in one place."""
+    never return a wrong answer (the CC core's exit does this with
+    one exceptAll)."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64(c1, c2)).alias("h1"),
@@ -1498,162 +1498,64 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup CLUSTERS: connected components over the near-dup pair
     graph (ngram-jaccard pairs), each doc labeled with its
     component's minimum doc_id — the step that turns pairwise
-    candidates into keep/drop groups in a dedup pipeline.
+    candidates into keep/drop groups in a dedup pipeline.  Registered
+    form of :func:`clusters_from` over the documents fixture, under
+    both `dedup_clusters` and `dedup_clusters_largestar`.
 
-    Iterative min-label propagation: every vertex starts as its own
-    label; each round joins labels across edges and takes the min;
-    stops when no label changes (diameter-bounded, large-star style
-    — the driver loop only orchestrates, every round is a
-    distributed join+agg).  The DuckDB oracle computes the same
-    components with a recursive CTE, so even this iterative,
-    'non-SQL' operator is differentially tested.
+    The components come from large-star/small-star edge contraction
+    (:func:`_star_edges_converged`); every round is a distributed
+    window+distinct and the driver loop only orchestrates.  The
+    DuckDB oracle computes the same components with a recursive CTE,
+    so even this iterative, 'non-SQL' operator is differentially
+    tested.
     """
-    return _cluster_rollup(_min_label_assignments(spark, sf_dir))
+    return clusters_from(load_table(spark, sf_dir, "documents"))
 
 
-def cc_min_label_loop(
-    touched: DataFrame,
-    edges: DataFrame,
-    max_rounds: int = 20,
-    ptr_from: int = 3,
-) -> tuple[DataFrame, tuple]:
-    """The connected-components label loop over a symmetrized,
-    checkpointed edge list: min-label propagation WITH pointer
-    jumping (round 14, VERDICT r13 #6) — each round takes
-
-        label(v) <- min(label(v), min_{u in N(v)} label(u),
-                        label(label(v)))
-
-    The label(label(v)) hop is the hash-to-min/pointer-doubling
-    step (Rastogi et al., "Finding Connected Components in
-    Map-Reduce in Logarithmic Rounds", ICDE 2013): labels chase the
-    component minimum through an exponentially-growing horizon, so
-    convergence needs O(log diameter) rounds instead of
-    O(diameter) — at 100 TB each round is a full shuffle of the
-    pair-graph vertex set, and the plain propagation additionally
-    hard-failed past diameter 20 (the round bound).  A 64-chain
-    that plain propagation cannot finish inside the bound converges
-    in <= 9 rounds (pinned by test).  The hop engages adaptively
-    from round 3 (see inline comment) so clique-shaped dup graphs —
-    the common case — never pay its extra self-join; results are
-    identical (monotone min over ids from the same component;
-    parity 4/4 + the exact fixpoint check below).
-
-    Returns (labels, final fingerprint) — the fingerprint's count
-    component is the touched-vertex cardinality, which the caller's
-    broadcast size guard reads."""
-
-    def _labels_fp(df: DataFrame) -> tuple:
-        # shared fingerprint (cardinality is constant for label
-        # assignments, so the count component is redundant but
-        # harmless); exact loop-exit re-verification happens below
-        return _set_fingerprint(df, "doc_id", "label")
-
-    labels = touched.select("doc_id", F.col("doc_id").alias("label"))
-    prev_fp = _labels_fp(labels)
-    converged = False
-    for rnd in range(1, max_rounds + 1):
-        neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy("doc_a")
-            .agg(F.min("label").alias("nlabel"))
+def clusters_from(d: DataFrame) -> DataFrame:
+    """Dup-group summary rows (cluster_id, cluster_size, members) of
+    a (doc_id, text) relation: one row per connected component of
+    its near-dup pair graph with more than one member."""
+    return (
+        _component_labels(d)
+        .groupBy("label")
+        .agg(
+            F.count("*").alias("cluster_size"),
+            # serialized (comma-joined) member list: a flat string is
+            # hashable by any downstream comparator, unlike array rows
+            F.array_join(
+                F.sort_array(F.collect_list("doc_id")).cast("array<string>"),
+                ",",
+            ).alias("members"),
         )
-        joined = labels.join(
-            neighbor_min, labels.doc_id == neighbor_min.doc_a, "left"
+        .where(F.col("cluster_size") > 1)  # only real dup groups
+        .select(
+            F.col("label").alias("cluster_id"), "cluster_size", "members"
         )
-        label_terms = [
-            F.col("label"),
-            F.coalesce("nlabel", F.col("label")),
-        ]
-        # The pointer hop costs one extra self-join of the label
-        # relation per round, and dup graphs are overwhelmingly
-        # clique-shaped (LSH pairs within a duplicate family), where
-        # plain propagation already converges in 2-3 rounds — so the
-        # hop engages ADAPTIVELY from round 3: cliques never pay it
-        # (fixture A/B read 1.9x with it always-on), while a
-        # diameter-d chain still converges in O(log d) rounds
-        # (2 plain rounds reach distance 2, then the horizon
-        # doubles per round).
-        if rnd >= ptr_from:
-            # pointer jump: label of my label (label values are
-            # always doc_ids of touched vertices, so the lookup
-            # always lands; left join + coalesce only defends the
-            # invariant)
-            ptr = labels.select(
-                F.col("doc_id").alias("label"),
-                F.col("label").alias("plabel"),
-            )
-            joined = joined.join(ptr, "label", "left")
-            label_terms.append(F.coalesce("plabel", F.col("label")))
-        # localCheckpoint each round: iterative self-joins otherwise
-        # DOUBLE the logical plan per iteration (exponential analysis
-        # / codegen cost -> driver OOM long before data is the issue)
-        new_labels = (
-            joined.select(
-                "doc_id", F.least(*label_terms).alias("label")
-            )
-            # lazy: the fingerprint aggregate below is the single
-            # action that materializes this round (was eager
-            # checkpoint + join-diff count = 2 jobs per round)
-            .localCheckpoint(eager=False)
-        )
-        new_fp = _labels_fp(new_labels)
-        prev_labels = labels
-        labels = new_labels
-        CC_ROUNDS_TAKEN["rounds"] = rnd
-        if new_fp == prev_fp:
-            converged = True
-            break
-        prev_fp = new_fp
-    if not converged:
-        raise RuntimeError(
-            "dedup_clusters: min-label propagation did not converge "
-            f"in {max_rounds} rounds (needs O(log diameter) with "
-            "pointer jumping — raise the bound)"
-        )
-    # exact confirmation of the fingerprint fixpoint (labels can only
-    # decrease monotonically, so equality here proves convergence)
-    if (
-        labels.alias("n")
-        .join(prev_labels.alias("o"), "doc_id")
-        .where(F.col("n.label") != F.col("o.label"))
-        .limit(1)
-        .count()
-        != 0
-    ):
-        raise RuntimeError(
-            "dedup_clusters: fingerprint collision — assignments "
-            "matched hashes but differ; raise hash width"
-        )
-    return labels, prev_fp
+        .orderBy("cluster_id")
+    )
 
 
-# instrumentation: last min-label loop / star-contraction round counts
-CC_ROUNDS_TAKEN = {"rounds": None, "star_rounds": None}
+# instrumentation: round count of the last star contraction
+CC_ROUNDS_TAKEN = {"star_rounds": None}
 
 
-def _min_label_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _component_labels(d: DataFrame) -> DataFrame:
     """(doc_id, label) component assignments over the ngram-jaccard
-    pair graph — the shared core of dedup_clusters (dup-group
-    summary), dedup_apply_keepers / dedup_keepers_by_quality (the
-    apply steps) and dedup_materialize_corpus.
+    pair graph of a (doc_id, text) relation, for the WHOLE relation
+    (singletons label themselves) — the shared core of
+    dedup_clusters (dup-group summary), dedup_apply_keepers /
+    dedup_keepers_by_quality (the apply steps) and
+    dedup_materialize_corpus.
 
-    Round 14 (VERDICT r13 #6): the component computation is the
-    large-star/small-star EDGE CONTRACTION (`_star_edges_converged`,
-    shared with dedup_clusters_largestar) instead of per-vertex
-    min-label propagation.  Measured at sf0.1 the propagation loop
-    needed NINE join+aggregate rounds (the pair graph carries
-    chain-shaped components, not just cliques) at ~0.6 s of fixed
-    per-round cost each, while star contraction converges in 3-4
-    window rounds — and at 100 TB every saved round is a full
-    shuffle of the dup-subset.  Results are identical (both
-    algorithms assign the component minimum; the long-standing
-    cross-algorithm equality test pins it, and the recursive-CTE
-    oracles re-verify every query built on this).  The min-label
-    primitive (now with adaptive pointer jumping) remains available
-    as :func:`cc_min_label_loop` with its own convergence tests."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    Large-star/small-star edge contraction rather than per-vertex
+    min-label propagation: at sf0.1 the pair graph carries
+    chain-shaped components, where propagation needed nine
+    join+aggregate rounds against 3-4 window rounds here — and at
+    100 TB every saved round is a full shuffle of the dup subset.
+    Both assign the component minimum, which the recursive-CTE
+    oracles re-verify for every query built on this."""
+    pairs = jaccard_pairs_from(d).select("doc_a", "doc_b")
     star, fp = _star_edges_converged(pairs)
     return _labels_from_star_edges(d, star, fp[0])
 
@@ -1697,9 +1599,9 @@ def dedup_apply_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Covers the WHOLE corpus (singletons included, n_suppressed=0),
     unlike dedup_clusters' dup-groups-only summary — the row count
     equals the post-dedup corpus size, the first number any corpus
-    report states.  Same component core (_min_label_assignments),
-    same recursive-CTE oracle family."""
-    labels = _min_label_assignments(spark, sf_dir)
+    report states.  Same component core (_component_labels), same
+    recursive-CTE oracle family."""
+    labels = _component_labels(load_table(spark, sf_dir, "documents"))
     return (
         labels.groupBy("label")
         .agg((F.count(F.lit(1)) - 1).alias("n_suppressed"))
@@ -1708,64 +1610,25 @@ def dedup_apply_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_rollup(labels: DataFrame) -> DataFrame:
-    """(doc_id, label) -> dup-group summary rows; shared by both CC
-    algorithms so they certify against the same oracle."""
-    return (
-        labels.groupBy("label")
-        .agg(
-            F.count("*").alias("cluster_size"),
-            # serialized (comma-joined) member list: a flat string is
-            # hashable by any downstream comparator, unlike array rows
-            F.array_join(
-                F.sort_array(F.collect_list("doc_id")).cast("array<string>"),
-                ",",
-            ).alias("members"),
-        )
-        .where(F.col("cluster_size") > 1)  # only real dup groups
-        .select(
-            F.col("label").alias("cluster_id"), "cluster_size", "members"
-        )
-        .orderBy("cluster_id")
-    )
-
-
-def largestar_clusters_from(d: DataFrame) -> DataFrame:
-    """Large-star/small-star connected components over the
-    near-dup pair graph of a (doc_id, text) relation — the
-    ESCALATION PATH for when min-label
-    propagation's O(diameter) rounds are too many (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC 2014:
+def _star_edges_converged(pairs: DataFrame) -> tuple[DataFrame, tuple]:
+    """Alternating large-star/small-star contraction of a near-dup
+    pair list to its converged star edge set (member -> component
+    min) — the package's one connected-components core (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC 2014:
     alternating star operations converge in O(log^2 n) rounds
     regardless of diameter, so a 10^9-node chain costs ~30 rounds
     instead of 10^9).
 
-    Edge set is kept CANONICAL (hi > lo) between rounds:
+    The edge set is kept CANONICAL (hi > lo) between rounds:
     - large-star groups the symmetrized adjacency by u and hangs
       every LARGER neighbor off min(N(u) + u);
     - small-star groups canonical edges by their high endpoint and
       hangs the smaller neighbors + itself off the minimum.
-    Both are groupBy+join rounds keyed by vertex — per-round
-    shuffle is edge-cardinality, never quadratic; localCheckpoint
-    cuts the per-round lineage exactly as the label-prop loop does.
-    On convergence the edge set IS the star assignment
-    (member -> component min).  Same rollup, same recursive-CTE
-    oracle as dedup_clusters; cross-algorithm equality is asserted
-    in tests."""
-    edges, fp = _star_edges_converged(
-        jaccard_pairs_from(d).select("doc_a", "doc_b")
-    )
-    labels = _labels_from_star_edges(d.select("doc_id"), edges, fp[0])
-    return _cluster_rollup(labels)
-
-
-def _star_edges_converged(pairs: DataFrame) -> tuple[DataFrame, tuple]:
-    """Alternating large-star/small-star contraction of a near-dup
-    pair list to its converged star edge set (member -> component
-    min) — the shared CC core of dedup_clusters_largestar AND (since
-    round 14) _min_label_assignments.  Returns (edges, fingerprint);
-    the fingerprint's count component is the edge cardinality the
-    broadcast size guard reads."""
+    Per-round shuffle is edge-cardinality, never quadratic, and
+    localCheckpoint cuts the per-round lineage.  On convergence the
+    edge set IS the star assignment (member -> component min).
+    Returns (edges, fingerprint); the fingerprint's count component
+    is the edge cardinality the broadcast size guard reads."""
     edges = (
         pairs.select(
             F.greatest("doc_a", "doc_b").alias("u"),
@@ -1839,7 +1702,7 @@ def _star_edges_converged(pairs: DataFrame) -> tuple[DataFrame, tuple]:
             break
     else:
         raise RuntimeError(
-            "dedup_clusters_largestar: star rounds did not converge "
+            "connected components: star rounds did not converge "
             "in 15 iterations"
         )
     # one exact set-equality check at exit closes the (astronomically
@@ -1848,16 +1711,10 @@ def _star_edges_converged(pairs: DataFrame) -> tuple[DataFrame, tuple]:
     # set equality
     if edges.exceptAll(prev_edges).limit(1).count() != 0:
         raise RuntimeError(
-            "dedup_clusters_largestar: fingerprint collision — "
+            "connected components: fingerprint collision — "
             "edge sets matched hashes but differ; raise hash width"
         )
     return edges, prev_fp
-
-
-def dedup_clusters_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered form of :func:`largestar_clusters_from` over the
-    documents fixture."""
-    return largestar_clusters_from(load_table(spark, sf_dir, "documents"))
 
 
 # Shared recursive-CTE component computation (documents -> comp of
@@ -1911,9 +1768,11 @@ ORDER BY keeper_doc_id
 
 
 register("dedup_clusters", dedup_clusters, DEDUP_CLUSTERS_ORACLE)
-register(
-    "dedup_clusters_largestar", dedup_clusters_largestar, DEDUP_CLUSTERS_ORACLE
-)
+# one CC core, so the large-star name (still listed by bench.py and
+# scripts/plan_report.py) runs the same function as dedup_clusters
+register("dedup_clusters_largestar", dedup_clusters, DEDUP_CLUSTERS_ORACLE)
+
+
 def dedup_keepers_by_quality(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1925,12 +1784,10 @@ def dedup_keepers_by_quality(
     copies).  One map-side-combining max_by per component; the
     quality column rides the label shuffle, no extra join against
     the corpus afterwards."""
-    labels = _min_label_assignments(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "n_chars"
-    )
+    d = load_table(spark, sf_dir, "documents")
     return (
-        labels.join(docs, "doc_id")
+        _component_labels(d)
+        .join(d.select("doc_id", "n_chars"), "doc_id")
         .groupBy("label")
         .agg(
             F.max_by(
@@ -1995,11 +1852,11 @@ def dedup_materialize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold per surviving row — the same plan you'd run at 100 TB,
     where the suppress list is the small side by construction.
     """
-    labels = _min_label_assignments(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
+    labels = _component_labels(d)
     suppressed = labels.where(F.col("label") != F.col("doc_id")).select(
         "doc_id"
     )
-    d = load_table(spark, sf_dir, "documents")
     # round 14: the full-text fingerprint fold runs in the Arrow
     # kernel (guide §4.2) — one NumPy modular fold per batch instead
     # of the per-char Catalyst HOF over every surviving document

@@ -1535,12 +1535,6 @@ def _encode_gif_anim_batches(
         yield pd.DataFrame({"doc_id": pdf["doc_id"], "vid": vids})
 
 
-def build_gif_anim_payloads(d: DataFrame) -> DataFrame:
-    return _spread(_gif_anim_src(d)).mapInPandas(
-        _encode_gif_anim_batches, schema="doc_id bigint, vid binary"
-    )
-
-
 def _gif_anim_src(d: DataFrame) -> DataFrame:
     body = _ascii_body(_VID_BODY_LEN)
     return d.select("doc_id", F.encode(body, "UTF-8").alias("body"))

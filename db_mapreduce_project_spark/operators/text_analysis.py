@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (
-    duck_word_fingerprint,
-    spark_word_fingerprint,
-)
+from ..functions.hashing import duck_word_fingerprint
 from ..functions.text import (
     BPE_ISH_RE,
     EN_STOPWORDS,

@@ -19,10 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.stable import (
-    duck_qavg_over,
     duck_qint,
     duck_qsum,
-    duck_qsum_over,
     qavg_window,
     qint,
     qsum,

@@ -15,10 +15,6 @@ def physical_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle Exchange operators in the physical plan
     (broadcast exchanges excluded) — the scale cost driver.

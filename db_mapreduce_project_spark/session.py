@@ -95,10 +95,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-built
-    session (e.g. the driver's).  Idempotent."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

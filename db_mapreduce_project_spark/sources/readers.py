@@ -9,10 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC: Spark's second built-in columnar format — same pushdown
     and pruning properties as parquet (vectorized reader on by

@@ -34,12 +34,12 @@ sys.path.insert(
 
 from db_mapreduce_project_spark.io import load_table
 from db_mapreduce_project_spark.operators.dedup import (
+    clusters_from,
     containment_pairs_bottomk_from,
     containment_pairs_ensemble_from,
     containment_pairs_from,
     containment_pairs_lsh_from,
     jaccard_pairs_from,
-    largestar_clusters_from,
     minhash_pairs_from,
 )
 from db_mapreduce_project_spark.operators.lm import (
@@ -63,7 +63,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 FAMILIES = {
     "minhash_lsh_pairs": minhash_pairs_from,
     "jaccard_pairs_exact": jaccard_pairs_from,
-    "largestar_cc": largestar_clusters_from,
+    "largestar_cc": clusters_from,
     "containment_exact": containment_pairs_from,
     "containment_lsh": containment_pairs_lsh_from,
     "containment_bottomk": containment_pairs_bottomk_from,

@@ -182,49 +182,31 @@ def test_ann_sq8_adc_fidelity_vs_exact_ip(spark):
             assert abs(r["adc"] - ip) / abs(ip) < 0.15, (r, ip)
 
 
-def test_cc_largestar_equals_labelprop(spark):
-    """Large-star/small-star CC must produce exactly the same dup
-    groups as min-label propagation — same labels (component min),
-    same members, same sizes."""
-    a = registry.QUERIES["dedup_clusters"](spark, SF).collect()
-    b = registry.QUERIES["dedup_clusters_largestar"](spark, SF).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_cc_pointer_jumping_logarithmic_rounds(spark):
-    """The CC label loop's pointer-jumping step (round 14, VERDICT
-    r13 #6) must converge in O(log diameter) rounds: a 64-vertex
-    CHAIN has diameter 63, so plain min-label propagation needs ~64
-    rounds (and the old 20-round bound made it RAISE); with
-    label(label(v)) doubling it must finish within 9 rounds and
-    still assign every vertex the component minimum."""
-    import pyspark.sql.functions as F
-
+def test_cc_star_contraction_logarithmic_rounds(spark):
+    """The CC core (large-star/small-star contraction) must converge
+    in a number of rounds logarithmic in the diameter, not linear: a
+    64-vertex CHAIN has diameter 63, where plain min-label
+    propagation needs ~64 rounds; star contraction must finish
+    within 9 and still assign every vertex the component minimum."""
     from db_mapreduce_project_spark.operators.dedup import (
         CC_ROUNDS_TAKEN,
-        cc_min_label_loop,
+        _labels_from_star_edges,
+        _star_edges_converged,
     )
 
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    edges = pairs.union(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).localCheckpoint(eager=True)
-    touched = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels, fp = cc_min_label_loop(touched, edges)
-    rows = labels.collect()
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    star, fp = _star_edges_converged(pairs)
+    rows = _labels_from_star_edges(docs, star, fp[0]).collect()
     assert len(rows) == n and all(r["label"] == 0 for r in rows)
-    assert fp[0] == n  # fingerprint count drives the broadcast guard
-    assert CC_ROUNDS_TAKEN["rounds"] is not None
-    assert CC_ROUNDS_TAKEN["rounds"] <= 9, CC_ROUNDS_TAKEN
+    # every non-minimum vertex hangs off the minimum; this edge count
+    # drives the broadcast guard
+    assert fp[0] == n - 1
+    assert CC_ROUNDS_TAKEN["star_rounds"] is not None
+    assert CC_ROUNDS_TAKEN["star_rounds"] <= 9, CC_ROUNDS_TAKEN
 
 
 def test_incremental_delta_consistent_with_full_lsh(spark):

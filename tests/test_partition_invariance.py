@@ -49,24 +49,22 @@ def test_stable_sum_partition_invariant(spark, sf_dir, nparts):
 def test_minhash_signature_partition_invariant(spark, sf_dir):
     """Sketches are pure hash arithmetic: signatures must be
     bit-identical under any input partitioning (this is what makes
-    MinHash dedup reproducible across cluster sizes)."""
-    from pyspark.sql import functions as F2
-
+    MinHash dedup reproducible across cluster sizes).  Runs the
+    shingle-hash kernel and signature that dedup_minhash_lsh uses."""
     from db_mapreduce_project_spark.functions.hashing import (
-        minhash_signature,
-        word_shingles,
+        minhash_signature_from_pairs,
+    )
+    from db_mapreduce_project_spark.functions.hashing_arrow import (
+        token_shingle_hash_pairs_arrow,
     )
 
     d = load_table(spark, sf_dir, "documents")
 
     def sigs(docs):
-        sh = word_shingles(docs, "doc_id", "text", n=3).select(
-            "doc_id", F2.xxhash64("shingle").alias("sh")
-        )
+        sh = token_shingle_hash_pairs_arrow(docs, "doc_id", "text", n=3)
         return sorted(
-            tuple(r) for r in minhash_signature(
-                sh, "doc_id", num_hashes=32, shingle_col="sh"
-            ).collect()
+            tuple(r)
+            for r in minhash_signature_from_pairs(sh, "doc_id", 32).collect()
         )
 
     assert sigs(d) == sigs(d.repartition(7))

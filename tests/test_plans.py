@@ -306,8 +306,8 @@ _UNKEYED_JOIN_OK = {
 _EAGER = {
     "dedup_clusters",
     "dedup_clusters_largestar",
-    "dedup_apply_keepers",  # runs the label-propagation loop eagerly
-    "dedup_materialize_corpus",  # same label-propagation loop
+    "dedup_apply_keepers",  # runs the star-contraction loop eagerly
+    "dedup_materialize_corpus",  # same star-contraction loop
     "ann_cosine_topk_matmul",
     "pagerank_trade",
     "kmeans_embeddings",
