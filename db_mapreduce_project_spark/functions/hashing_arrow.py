@@ -45,19 +45,31 @@ import re
 _WS_RE = re.compile("[ \t\n\x0b\x0c\r]+")
 
 
-def spread_narrow(
-    d: DataFrame, min_parts: int = 8, parts: int = 32
-) -> DataFrame:
-    """Widen a NARROW input before a Python kernel stage: the
-    fixture parquet is single-row-group, so without this the whole
-    batch kernel runs in ONE task — and, unlike the Catalyst folds
-    these kernels replace, the kernel's output inherits the scan's
-    partitioning (the old `.distinct()` exchange used to spread the
-    downstream consumers).  Decision reads the optimizer's size
-    estimate (no physical planning, no job): a scan under
-    min_parts x maxPartitionBytes cannot split wider than min_parts;
-    anything bigger passes through untouched — at real scale this
-    is a no-op, never a coalesce and never a payload shuffle."""
+def spread_narrow(d: DataFrame) -> DataFrame:
+    """Widen a NARROW input before a Python kernel stage (the Arrow
+    hash producers and every codec kernel): the fixture parquet is
+    single-row-group, so without this the whole batch kernel runs in
+    ONE task — and, unlike the Catalyst folds these kernels replace,
+    the kernel's output inherits the scan's partitioning (the old
+    `.distinct()` exchange used to spread the downstream consumers).
+
+    Width rule: W = sparkContext.defaultParallelism, one task per
+    core.  A scan under W x maxPartitionBytes (the optimizer's size
+    estimate — no physical planning, no job) cannot split W wide, so
+    it is round-robined to W partitions; anything bigger passes
+    through untouched — at real scale this is a no-op, never a
+    coalesce and never a payload shuffle.  If the size probe fails,
+    the input is widened: widening is semantics-free (every
+    kernel dedups per input row), failing while the query is being
+    built is not.
+
+    Why not wider: every Python task pays a fixed floor of about
+    150 ms on Python 3.11 — pyspark's worker calls
+    `importlib.invalidate_caches()` per task, which re-reads the
+    central directory of `pyspark.zip` once for each cached
+    zipimporter.  At a fixed 32 tasks on 4 cores that floor is paid
+    in 8 waves; at W tasks it is paid once per core."""
+    width = d.sparkSession.sparkContext.defaultParallelism
     try:
         max_part = int(
             d.sparkSession._jsparkSession.sessionState()
@@ -66,10 +78,19 @@ def spread_narrow(
         )
     except Exception:
         max_part = 128 * 1024 * 1024
-    est = int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est < min_parts * max_part:
-        return d.repartition(parts)
+    try:
+        est = _plan_size_bytes(d)
+    except Exception:
+        est = 0
+    if est < width * max_part:
+        return d.repartition(width)
     return d
+
+
+def _plan_size_bytes(d: DataFrame) -> int:
+    """The optimizer's size estimate of `d` (logical-plan stats, a
+    private JVM API: no physical planning, no job)."""
+    return int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def _codepoints(strings: list[str]) -> tuple[np.ndarray, np.ndarray]:

@@ -36,7 +36,7 @@ producing a wrong plane.
 Reference parity: the reference engine has no multimodal surface
 (SURVEY.md §2.2 — category absent; maprdeuce.cpp is text-only);
 this is north-star scope.  Scale shape: two mapInPandas Arrow
-kernels (build, decode) over `_spread` partitions; per-row state is
+kernels (build, decode) over `spread_narrow` partitions; per-row state is
 one small container; the oracle rebuilds each SAMPLED frame's
 decoded plane from first principles (the jpeg.py integer-DCT chain
 windowed per frame), so the value hash certifies the RIFF walk,
@@ -54,6 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing_arrow import spread_narrow
 from ..io import load_table
 from ..registry import register
 from .jpeg import (
@@ -67,7 +68,7 @@ from .jpeg import (
     decode_jpeg,
     encode_jpeg,
 )
-from .multimodal import _ascii_body, _ascii_px_sql, _spread
+from .multimodal import _ascii_body, _ascii_px_sql
 
 AVI_FRAMES = 4
 AVI_STEP = 32          # frame-to-frame window advance (50% overlap)
@@ -341,7 +342,7 @@ def multimodal_video_avi_mjpeg_stats(
     d = load_table(spark, sf_dir, "documents")
     from .multimodal import fuse_batches
 
-    stats = _spread(_avi_src(d)).mapInPandas(
+    stats = spread_narrow(_avi_src(d)).mapInPandas(
         fuse_batches(_encode_avi_batches, _sample_avi_frames_batches),
         schema=AVI_STATS_SCHEMA,
     )

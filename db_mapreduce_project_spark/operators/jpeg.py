@@ -42,9 +42,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing_arrow import spread_narrow
 from ..io import load_table
 from ..registry import register
-from .multimodal import _ascii_body, _ascii_px_sql
+from .multimodal import _ascii_body, _ascii_px_sql, fuse_batches
 
 JPEG_N = 8  # one 8x8 block per document
 JPEG_BODY_LEN = JPEG_N * JPEG_N
@@ -468,9 +469,7 @@ def build_jpeg_payloads(d: DataFrame) -> DataFrame:
     as the WAV pipeline: `_ascii_body` guarantees byte == ascii(char)
     for any input).  The source plane rides along for the loss-bound
     column."""
-    from .multimodal import _spread
-
-    return _spread(_jpeg_src(d)).mapInPandas(
+    return spread_narrow(_jpeg_src(d)).mapInPandas(
         _encode_jpeg_batches, schema="doc_id bigint, body binary, img binary"
     )
 
@@ -532,9 +531,7 @@ def multimodal_decode_jpeg_stats(
     single wrong bit anywhere — DCT, tables, zigzag, Huffman, byte
     stuffing, parser — breaks the value hash."""
     d = load_table(spark, sf_dir, "documents")
-    from .multimodal import _spread, fuse_batches
-
-    stats = _spread(_jpeg_src(d)).mapInPandas(
+    stats = spread_narrow(_jpeg_src(d)).mapInPandas(
         fuse_batches(_encode_jpeg_batches, _decode_jpeg_stats_batches),
         schema=JPEG_STATS_SCHEMA,
     )
@@ -680,9 +677,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")
-    from .multimodal import _spread, fuse_batches
-
-    ph = _spread(_jpeg_src(d)).mapInPandas(
+    ph = spread_narrow(_jpeg_src(d)).mapInPandas(
         fuse_batches(_encode_jpeg_batches, _phash_batches),
         schema="doc_id bigint, phash_src bigint, phash_dec bigint, "
         "ham_codec bigint",
@@ -826,10 +821,8 @@ def multimodal_phash_hamming_pairs(
     # kernel twice (4 mapInPandas instances in the lazy plan).
     # localCheckpoint materializes fingerprints ONCE — also the
     # 100 TB shape: hash the corpus once, then index the hashes.
-    from .multimodal import _spread, fuse_batches
-
     ph = (
-        _spread(_jpeg_src(d))
+        spread_narrow(_jpeg_src(d))
         .mapInPandas(
             fuse_batches(_encode_jpeg_batches, _phash_batches),
             schema="doc_id bigint, phash_src bigint, phash_dec bigint, "

@@ -38,7 +38,7 @@ to binary payloads) with the ninth container format.
 
 Scale shape (100 TB): identical to the other codec families — the
 payload column flows Arrow-batched through TWO mapInPandas kernels
-(assemble, parse) with the guarded `_spread` repartition; stats
+(assemble, parse) with the guarded `spread_narrow` repartition; stats
 are integer-exact so the DuckDB oracle re-derives them from the
 payload DEFINITION (per-byte arithmetic over the same rpad'ed
 text), certifying assemble -> sync-walk -> field decode -> frame
@@ -53,9 +53,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing_arrow import spread_narrow
 from ..io import load_table
 from ..registry import register
-from .multimodal import _ascii_body, _ascii_px_sql, _spread
+from .multimodal import _ascii_body, _ascii_px_sql
 
 # MPEG-1 Layer III bitrate table, index 1..14 (0 = free, 15 = bad)
 MP3_BITRATES = (32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
@@ -237,7 +238,7 @@ def multimodal_mp3_frame_stats(
     d = load_table(spark, sf_dir, "documents")
     body = _ascii_body(MP3_BODY_LEN)
     src = d.select("doc_id", F.encode(body, "UTF-8").alias("body"))
-    stats = _spread(src).mapInPandas(
+    stats = spread_narrow(src).mapInPandas(
         _mp3_stats_batches, schema=MP3_STATS_SCHEMA
     )
     return stats.orderBy("doc_id")

@@ -58,6 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing_arrow import spread_narrow
 from ..io import load_table
 from ..registry import register
 
@@ -408,25 +409,6 @@ def _ascii_px_sql(n: int) -> str:
     )
 
 
-def _spread(d: DataFrame, min_parts: int = 8, parts: int = 32) -> DataFrame:
-    """Parallelize a Python-codec kernel stage: the fixture parquet
-    is single-row-group, so without this the whole per-doc codec
-    loop runs in ONE task.  Only widens narrow inputs — at real
-    scale the scan already has thousands of partitions and this is
-    a no-op (never a coalesce).
-
-    The narrowness probe reads the optimizer's size estimate
-    (round 14): the old `d.rdd.getNumPartitions()` compiled the
-    whole subplan to an RDD DAG (~50-100 ms of driver work per
-    codec query, thrown away immediately); the logical-plan
-    `sizeInBytes` statistic answers the same question — can this
-    scan even have min_parts partitions? — without physical
-    planning.  Shared with the hash kernels' spread_narrow."""
-    from ..functions.hashing_arrow import spread_narrow
-
-    return spread_narrow(d, min_parts, parts)
-
-
 def fuse_batches(*fns):
     """Compose mapInPandas batch kernels into ONE Python stage
     (guide §4.4): fuse_batches(enc, dec) pipes each task's Arrow
@@ -523,7 +505,7 @@ def build_png_payloads(d: DataFrame) -> DataFrame:
     stage sits); the binary column then flows Arrow-batched to the
     decode kernel, never row-by-row through Python between
     operators."""
-    return _spread(_png_src(d)).mapInPandas(
+    return spread_narrow(_png_src(d)).mapInPandas(
         _encode_png_batches, schema="doc_id bigint, img binary"
     )
 
@@ -568,7 +550,7 @@ def multimodal_decode_png_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     side breaks the oracle."""
     d = load_table(spark, sf_dir, "documents")
     # fused encode->decode: one Python stage instead of two (§4.4)
-    stats = _spread(_png_src(d)).mapInPandas(
+    stats = spread_narrow(_png_src(d)).mapInPandas(
         fuse_batches(_encode_png_batches, _decode_png_stats_batches),
         schema=DECODE_SCHEMA,
     )
@@ -703,7 +685,7 @@ def build_wav_payloads(d: DataFrame) -> DataFrame:
     RIFF container with fmt/JUNK/data chunks (encode_wav).  The
     binary column flows Arrow-batched between kernels, never
     row-by-row through Python between operators."""
-    return _spread(_wav_src(d)).mapInPandas(
+    return spread_narrow(_wav_src(d)).mapInPandas(
         _encode_wav_batches, schema="doc_id bigint, wav binary"
     )
 
@@ -761,7 +743,7 @@ def multimodal_decode_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel shape."""
     d = load_table(spark, sf_dir, "documents")
     # fused encode->decode: one Python stage instead of two (§4.4)
-    stats = _spread(_wav_src(d)).mapInPandas(
+    stats = spread_narrow(_wav_src(d)).mapInPandas(
         fuse_batches(_encode_wav_batches, _decode_wav_stats_batches),
         schema=WAV_STATS_SCHEMA,
     )
@@ -964,7 +946,7 @@ def multimodal_decode_rice_stats(
     stream format, and every bit of that stream is produced by this
     module, no codec library involved."""
     d = load_table(spark, sf_dir, "documents")
-    stats = _spread(_wav_src(d)).mapInPandas(
+    stats = spread_narrow(_wav_src(d)).mapInPandas(
         fuse_batches(_encode_wav_batches, _rice_stats_batches),
         schema=WAV_STATS_SCHEMA,
     )
@@ -1023,7 +1005,7 @@ def multimodal_decode_flac_stats(
     oracle certifies the whole container+prediction+entropy loop
     lossless."""
     d = load_table(spark, sf_dir, "documents")
-    stats = _spread(_wav_src(d)).mapInPandas(
+    stats = spread_narrow(_wav_src(d)).mapInPandas(
         fuse_batches(_encode_wav_batches, _flac_stats_batches),
         schema=WAV_STATS_SCHEMA,
     )
@@ -1121,7 +1103,7 @@ def multimodal_audio_mulaw_stats(
     target pipeline — swap the compander for an MFCC or codec
     frontend and the plumbing is unchanged."""
     d = load_table(spark, sf_dir, "documents")
-    stats = _spread(_wav_src(d)).mapInPandas(
+    stats = spread_narrow(_wav_src(d)).mapInPandas(
         fuse_batches(_encode_wav_batches, _mulaw_stats_batches),
         schema=MULAW_STATS_SCHEMA,
     )
@@ -1433,7 +1415,7 @@ def build_gif_payloads(d: DataFrame) -> DataFrame:
     body bytes as the PPM/PNG pipelines, as a 48x1 grayscale-
     palette image); LZW needs a dictionary, which Catalyst can't
     express, so the build runs in an Arrow mapInPandas kernel."""
-    return _spread(_gif_src(d)).mapInPandas(
+    return spread_narrow(_gif_src(d)).mapInPandas(
         _encode_gif_batches, schema="doc_id bigint, img binary"
     )
 
@@ -1475,7 +1457,7 @@ def multimodal_decode_gif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     PPM/PNG (the codecs must all round-trip the identical bytes),
     with GIF's own 48x1 dimensions."""
     d = load_table(spark, sf_dir, "documents")
-    stats = _spread(_gif_src(d)).mapInPandas(
+    stats = spread_narrow(_gif_src(d)).mapInPandas(
         fuse_batches(_encode_gif_batches, _decode_gif_stats_batches),
         schema=DECODE_SCHEMA,
     )
@@ -1588,7 +1570,7 @@ def multimodal_video_frame_stats(
     the value hash certifies container framing AND entropy decode
     AND the sampling pattern."""
     d = load_table(spark, sf_dir, "documents")
-    stats = _spread(_gif_anim_src(d)).mapInPandas(
+    stats = spread_narrow(_gif_anim_src(d)).mapInPandas(
         fuse_batches(_encode_gif_anim_batches, _sample_gif_frames_batches),
         schema=VID_STATS_SCHEMA,
     )

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -91,6 +92,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Ship the package to the Python workers as a directory on
+        # their path: kernels defined at module level pickle by
+        # reference, and a worker started outside the repo (another
+        # cwd, local-cluster executors) cannot import them otherwise.
+        # Not addPyFile of a zip: every zip on a worker's sys.path is
+        # re-read on every task (see spread_narrow).
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -740,3 +740,58 @@ def test_plans_md_covers_full_registry():
     } - {"query"}
     missing = set(registry.QUERIES) - rows
     assert not missing, f"PLANS.md missing rows for: {sorted(missing)}"
+
+
+def _round_robin_widths_under_kernel(df) -> list[int]:
+    """Widths of the plan's round-robin exchanges; any there is must
+    feed the MapInPandas node directly (its tree child)."""
+    plan = physical_plan(df)
+    widths = re.findall(r"RoundRobinPartitioning\((\d+)\)", plan)
+    if widths:
+        tree = plan.split("\n\n")[0]
+        assert re.search(r"MapInPandas \(\d+\)\n\s*\+- Exchange", tree), plan
+    return [int(w) for w in widths]
+
+
+def test_spread_narrow_width_is_default_parallelism(spark, monkeypatch):
+    """A narrow kernel input is round-robined to one task per core
+    (sparkContext.defaultParallelism, 8 in this session), not a fixed
+    width; an input the scan can already split that wide passes
+    through with no exchange; and a failing size probe widens instead
+    of failing the build, with the same rows."""
+    from db_mapreduce_project_spark.functions import hashing_arrow
+    from db_mapreduce_project_spark.io import load_table
+
+    width = spark.sparkContext.defaultParallelism
+    assert width == 8
+    # dedup queries built earlier in the session leave this very
+    # shingle relation cached; its InMemoryRelation would stand in for
+    # the plan under test
+    spark.catalog.clearCache()
+    docs = load_table(spark, SF, "documents")
+
+    def shingles():
+        return hashing_arrow.token_shingle_hash_pairs_arrow(
+            docs, "doc_id", "text"
+        )
+
+    as_is = shingles()
+    assert _round_robin_widths_under_kernel(as_is) == [width]
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "16")
+        wide = shingles()
+        assert _round_robin_widths_under_kernel(wide) == []
+    finally:
+        spark.conf.set(key, old)
+
+    def probe_fails(d):
+        raise RuntimeError("size probe unavailable")
+
+    monkeypatch.setattr(hashing_arrow, "_plan_size_bytes", probe_fails)
+    guarded = shingles()
+    assert _round_robin_widths_under_kernel(guarded) == [width]
+    assert guarded.count() == as_is.count()
+    assert guarded.exceptAll(as_is).count() == 0
