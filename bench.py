@@ -149,10 +149,12 @@ HEADLINE = [
     "dedup_minhash_lsh_j04",  # 16x2 banding preset (J>=0.41 regime)
     # round-12 additions
     "ann_mrl_rerank_adaptive",  # MRL with the sign-word collision budget
-    "ann_binary_hamming_rerank_fast",  # BLAS-assign serving default
-    "ann_ivfadc_rerank_fast",  # BLAS-assign quantized serving form
+    # the three `_fast` names run their sibling's function (one
+    # coarse assign); kept so round-over-round totals stay comparable
+    "ann_binary_hamming_rerank_fast",
+    "ann_ivfadc_rerank_fast",
     "ann_binary_hamming_rerank_trained",  # k-means++ cluster-tier config
-    "ann_mrl_rerank_adaptive_fast",  # BLAS-assign MRL SLA form
+    "ann_mrl_rerank_adaptive_fast",
     # round-13 additions
     "ann_ivfadc_rerank_trained",  # trained quantized serving form
     "ann_mrl_rerank_adaptive_trained",  # trained MRL SLA form

@@ -305,7 +305,6 @@ def ivfadc_rerank_cands_from(
     n_cells: int = N_CELLS,
     n_probe: int = N_PROBE,
     margin: int = RERANK_MARGIN,
-    fast_assign: bool = False,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """The IVFADC coarse stage alone — (q_id, n_id) candidates from
@@ -321,7 +320,7 @@ def ivfadc_rerank_cands_from(
     wc = Window.partitionBy("q_id").orderBy(
         F.col("adc").desc(), F.col("n_id").asc()
     )
-    en, cents, cb, codes = ivfadc_index(e, n_cells, fast_assign, cents)
+    en, cents, cb, codes = ivfadc_index(e, n_cells, cents)
     ranked = ivfadc_scored_from_index(en, cents, cb, codes, n_probe).withColumn(
         "crk", F.row_number().over(wc)
     )
@@ -345,7 +344,6 @@ def ivfadc_rerank_from(
     n_cells: int = N_CELLS,
     n_probe: int = N_PROBE,
     margin: int = RERANK_MARGIN,
-    fast_assign: bool = False,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC + exact rerank over a (vec_id, embedding) relation:
@@ -374,7 +372,7 @@ def ivfadc_rerank_from(
     harness to demonstrate the failure mode the adaptive form
     avoids)."""
     cands = ivfadc_rerank_cands_from(
-        e, rerank_c, n_cells, n_probe, margin, fast_assign, cents
+        e, rerank_c, n_cells, n_probe, margin, cents
     )
     return exact_rerank_tail(e, cands)
 
@@ -1037,27 +1035,18 @@ def mrl_cands_from(
     n_probe: int = N_PROBE,
     mrl_dim: int = MRL_DIM,
     margin: int = RERANK_MARGIN,
-    fast_assign: bool = False,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """The MRL coarse stage alone — (q_id, n_id) candidates from the
     truncated-dimension IVF index, cut to the top rerank_c per query
     by truncated cosine; rerank_c=None derives the cut from the
     truncated sign-word collision histogram
-    (:func:`mrl_collision_budget` — the adaptive serving form);
-    fast_assign=True routes the corpus cell assignment through the
-    Arrow/BLAS twin on the TRUNCATED vectors (the scale serving
-    path — the Catalyst fold on 16 dims is still O(n*cells*16) of
-    interpreted arithmetic at derive_n_cells geometry).  Exposed
+    (:func:`mrl_collision_budget` — the adaptive serving form).
+    Exposed
     separately so the per-stage latency harness
     (scripts/ann_recall_scale.py) times the SAME subplan the
     serving pipeline runs."""
-    from .similarity import (
-        ivf_assign,
-        ivf_assign_arrow,
-        ivf_centroids,
-        ivf_probes,
-    )
+    from .similarity import ivf_assign, ivf_centroids, ivf_probes
     from ..functions.vectors import l2
 
     trunc = e.select(
@@ -1073,9 +1062,7 @@ def mrl_cands_from(
     # the candidate ranking and the sign-word collision budget both
     # consume it and would each replay the coarse assign fold — the
     # ivfadc_index cached-codes rationale applied to the MRL form
-    assigned = (ivf_assign_arrow if fast_assign else ivf_assign)(
-        t, cents
-    ).cache()
+    assigned = ivf_assign(t, cents).cache()
     probes = ivf_probes(t, cents, n_probe)
     wc = Window.partitionBy("q_id").orderBy(
         F.col("tcos").desc(), F.col("n_id").asc()
@@ -1115,11 +1102,10 @@ def mrl_rerank_from(
     n_probe: int = N_PROBE,
     mrl_dim: int = MRL_DIM,
     margin: int = RERANK_MARGIN,
-    fast_assign: bool = False,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     cands = mrl_cands_from(
-        e, rerank_c, n_cells, n_probe, mrl_dim, margin, fast_assign, cents
+        e, rerank_c, n_cells, n_probe, mrl_dim, margin, cents
     )
     full_q = e.where(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("fq")
@@ -1269,29 +1255,13 @@ register(
     ann_mrl_rerank_adaptive,
     ANN_MRL_RERANK_ADAPTIVE_ORACLE,
 )
-
-
-def ann_mrl_rerank_adaptive_fast(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """:func:`mrl_rerank_from` adaptive with the Arrow/BLAS assign
-    on the truncated prefix — the third BLAS serving twin, making
-    every decision-table form driver-visible in its deployed
-    configuration.  Rows-only like the other twins: contract =
-    pinned row-equality with the value-hash-oracled
-    ann_mrl_rerank_adaptive (test_mrl_fast_assign_matches_catalyst_
-    form) + the ladder floors (mrl_rerank_adaptive_blas_assign:
-    recall 1.0 / worst 1.0 at 500k/1M, 26.8 / 40.7 s — the fastest
-    certified serving form at the 1M rung)."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return mrl_rerank_from(e, None, fast_assign=True)
-
-
-register("ann_mrl_rerank_adaptive_fast", ann_mrl_rerank_adaptive_fast)
+# one coarse assign, so the `_fast` serving names (still listed by
+# bench.py) run their sibling's function, rows-only
+register("ann_mrl_rerank_adaptive_fast", ann_mrl_rerank_adaptive)
 
 
 def binary_hamming_rerank_from(
-    e: DataFrame, margin: int = RERANK_MARGIN, fast_assign: bool = False
+    e: DataFrame, margin: int = RERANK_MARGIN
 ) -> DataFrame:
     """Binary-quantization serving (Charikar sign sketch + rescore):
     Hamming over 8-byte packed sign words proposes candidates
@@ -1301,12 +1271,8 @@ def binary_hamming_rerank_from(
     serving form in the family: 1 bit/dim + cell id.  Clone
     families quantize to IDENTICAL sign words (the PQ exact-tie
     mechanism, not SQ8's unbounded sub-step error), so the
-    margin * max_cluster + k budget rule transfers verbatim.
-    fast_assign=True routes the coarse assign through the
-    Arrow/BLAS twin (the scale serving path)."""
-    cands = binary_hamming_cands_from(
-        e, margin=margin, fast_assign=fast_assign
-    )
+    margin * max_cluster + k budget rule transfers verbatim."""
+    cands = binary_hamming_cands_from(e, margin=margin)
     return exact_rerank_tail(e, cands)
 
 
@@ -1349,49 +1315,8 @@ register(
     ann_binary_hamming_rerank,
     ANN_BINARY_HAMMING_RERANK_ORACLE,
 )
-
-
-# ---------------------------------------------------------------
-# Fast-assign serving twins (round-12, VERDICT r11 #4): the
-# registered forms of the two production serving paths with the
-# Arrow/BLAS coarse assign (similarity.ivf_assign_arrow) — the
-# configuration a cluster serving tier actually runs (7.2x/6.8x
-# faster at the 1M/1024-cell rung, ANN_RECALL_r11.json), made
-# driver-visible instead of living only in ladder scripts.
-#
-# Correctness contract: ROWS-ONLY by design.  The BLAS matmul's
-# float64 partial-sum order differs from the Catalyst fold the
-# DuckDB oracle mirrors, so an exact-tie cell assignment can flip
-# in the last ulp and a value hash would be brittle by
-# construction.  Instead the contract is (a) the pinned
-# assign-equivalence tests (tests/test_ann_recall.py: identical
-# argmax + tie-break + zero-norm edges on real data) and (b) a
-# pinned end-to-end equality test: each fast twin returns
-# row-for-row the SAME result as its fully-oracled sibling on both
-# fixture SFs, so the sibling's value-hash parity transfers.
-# Recall at corpus scale is certified in the ANN_RECALL ladder
-# (blas_assign rows: recall 1.0 / worst 1.0 at 1M/1024 cells).
-# ---------------------------------------------------------------
-
-
-def ann_binary_hamming_rerank_fast(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """:func:`binary_hamming_rerank_from` with the Arrow/BLAS
-    coarse assign — the documented serving default at scale."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return binary_hamming_rerank_from(e, fast_assign=True)
-
-
-def ann_ivfadc_rerank_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`ivfadc_rerank_from` with the Arrow/BLAS coarse
-    assign — the quantized serving form's scale configuration."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return ivfadc_rerank_from(e, fast_assign=True)
-
-
-register("ann_binary_hamming_rerank_fast", ann_binary_hamming_rerank_fast)
-register("ann_ivfadc_rerank_fast", ann_ivfadc_rerank_fast)
+register("ann_binary_hamming_rerank_fast", ann_binary_hamming_rerank)
+register("ann_ivfadc_rerank_fast", ann_ivfadc_rerank)
 
 
 def ann_binary_hamming_rerank_trained(
@@ -1400,12 +1325,11 @@ def ann_binary_hamming_rerank_trained(
     """The binary serving path under the TRAINED coarse quantizer
     (round-12, VERDICT r11 #1): spherical k-means++ centroids from
     a bounded sample (similarity.train_ivf_centroids) + the
-    Arrow/BLAS assign + the collision-derived adaptive budget +
-    exact rescore — the full cluster-tier configuration as ONE
-    driver-visible query.  Rows-only: k-means++ centroids are not
-    worth mirroring in SQL; the correctness contract is the
-    determinism test (same sample, same seed -> identical
-    centroids), the pinned fixture recall floor
+    collision-derived adaptive budget + exact rescore — the full
+    cluster-tier configuration as ONE driver-visible query.
+    Rows-only: k-means++ centroids are not worth mirroring in SQL;
+    the correctness contract is the determinism test (same sample,
+    same seed -> identical centroids), the pinned fixture recall floor
     (tests/test_ann_recall.py), and the corpus-scale certification
     (ANN_RECALL_r12.json trained rows: recall 1.0 / worst 1.0 at
     100k/500k/1M with balanced occupancy)."""
@@ -1413,7 +1337,7 @@ def ann_binary_hamming_rerank_trained(
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = train_ivf_centroids(e, N_CELLS)
-    cands = binary_hamming_cands_from(e, fast_assign=True, cents=cents)
+    cands = binary_hamming_cands_from(e, cents=cents)
     return exact_rerank_tail(e, cands)
 
 
@@ -1425,10 +1349,10 @@ register(
 def ann_ivfadc_rerank_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC serving under the TRAINED coarse quantizer (round-13,
     VERDICT r12 #5): spherical k-means++ centroids (bounded-sample
-    train) + BLAS assign + the PQ-code collision budget + exact
-    rescore — the second decision-table row in its deployed
-    configuration.  Rows-only, same contract as the binary trained
-    twin: build determinism is pinned
+    train) + the PQ-code collision budget + exact rescore — the
+    second decision-table row in its deployed configuration.
+    Rows-only, same contract as the binary trained twin: build
+    determinism is pinned
     (test_trained_twins_deterministic), fixture recall floors are
     pinned (test_trained_twins_fixture_floors), and corpus-scale
     recall is certified by the ANN_RECALL_r12 trained rows
@@ -1437,7 +1361,7 @@ def ann_ivfadc_rerank_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = train_ivf_centroids(e, N_CELLS)
-    return ivfadc_rerank_from(e, fast_assign=True, cents=cents)
+    return ivfadc_rerank_from(e, cents=cents)
 
 
 register("ann_ivfadc_rerank_trained", ann_ivfadc_rerank_trained)
@@ -1460,7 +1384,7 @@ def ann_mrl_rerank_adaptive_trained(
         "vec_id", F.slice("embedding", 1, MRL_DIM).alias("embedding")
     )
     cents = train_ivf_centroids(trunc, N_CELLS)
-    return mrl_rerank_from(e, None, fast_assign=True, cents=cents)
+    return mrl_rerank_from(e, None, cents=cents)
 
 
 register("ann_mrl_rerank_adaptive_trained", ann_mrl_rerank_adaptive_trained)

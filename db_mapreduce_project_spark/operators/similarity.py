@@ -527,7 +527,7 @@ def train_ivf_centroids(
     cross-engine k-means++ is not worth mirroring in SQL — so
     trained-quantizer serving forms are certified by measured
     recall + occupancy (ANN_RECALL_r12.json ladder) rather than a
-    value hash, exactly like the BLAS assign.
+    value hash.
 
     Method: the sample is every vector with
     pmod(xxhash64(vec_id), stride) == 0 (stride = n // sample_cap,
@@ -627,19 +627,40 @@ def train_ivf_centroids(
                 new[cell] = X[order[j % m]]
         cents = new
 
-    sess = e.sparkSession
-    return sess.createDataFrame(
-        [
-            (int(i), [float(v) for v in cents[i]], 1.0)
-            for i in range(k)
-        ],
+    import pandas as pd
+
+    # from pandas, not a list of rows: the Arrow path makes a
+    # LocalRelation, so every consumer's broadcast of the centroids
+    # runs no Python tasks (a list becomes a Python RDD that each
+    # consumer rescans)
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame(
+            {
+                "cell": np.arange(k, dtype="int64"),
+                "cv": list(cents),
+                "c_norm": 1.0,
+            }
+        ),
         "cell long, cv array<double>, c_norm double",
     )
 
 
 def ivf_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-cell assignment (map-side argmax against the
-    broadcast centroids): (vec_id, embedding, norm, cell)."""
+    broadcast centroids): (vec_id, embedding, norm, cell).
+
+    Ties resolve to the highest cosine, then the LOWEST cell id.
+    Zero-norm edges follow from the ordering key: the cosine is
+    dot / nullif(norm*c_norm, 0) and max_by orders by struct(ccos,
+    -cell).  A struct is never NULL, and a NULL field sorts BELOW
+    every value in struct comparison.  So a zero-norm CENTROID
+    (NULL ccos against every vector) loses to any non-NULL cosine,
+    even a negative one, and a zero-norm VECTOR (NULL ccos against
+    every centroid) ties on the NULL first field and resolves on
+    the -cell tiebreak: it gets the LOWEST cell id of ALL
+    centroids, zero-norm ones included.  With no centroids at all,
+    the inner join drops every row.  All four edges are measured
+    and pinned in tests/test_ann_recall.py."""
     ccos = dot("embedding", "cv") / F.nullif(
         F.col("norm") * F.col("c_norm"), F.lit(0.0)
     )
@@ -648,94 +669,6 @@ def ivf_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
         .select("vec_id", ccos.alias("ccos"), "cell")
         .groupBy("vec_id")
         .agg(F.max_by("cell", F.struct(F.col("ccos"), -F.col("cell"))).alias("cell"))
-    )
-    return e.join(best_cell, "vec_id")
-
-
-def ivf_assign_arrow(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """Scale-path twin of :func:`ivf_assign`: the same
-    nearest-centroid argmax computed as ONE float64 BLAS matmul per
-    Arrow batch instead of a cells-way Catalyst crossJoin fold.
-
-    Why it exists (round 11, ANN_RECALL_r11.json): at the
-    derive_n_cells geometry the Catalyst assign is O(n*cells*d) of
-    interpreted higher-order-function arithmetic and dominates the
-    1M/1024-cell serve (444 of 591 s); the identical argmax as a
-    unit-row matmul is a few seconds of BLAS.  This is exactly the
-    "trained quantizer + BLAS-assisted encode" shape a cluster
-    serving tier uses — embarrassingly parallel map work over
-    Arrow batches, centroids shipped once in the closure (<= 2 MB
-    at the 4096-cell cap; the collect is bounded by N_CELLS'
-    derivation cap, the repo's guarded-collect discipline).
-
-    Tie-break matches ivf_assign (highest ccos, then LOWEST cell):
-    centroids are laid out in ascending-cell order and np.argmax
-    returns the first maximum.  Float64 partial-sum ORDER differs
-    from Catalyst's sequential fold (BLAS reorders), so exact-tie
-    edges can resolve differently in the last ulp — the registered
-    fixture forms therefore keep :func:`ivf_assign` (the
-    oracle-mirrored fold); ladders and serving deployments use
-    this form and certify recall against exact ground truth
-    (`binary_hamming_rerank_blas_assign` rung rows).
-
-    Zero-norm semantics mirror the MEASURED Catalyst fold (round-12
-    ADVICE): in ivf_assign the cosine is dot / nullif(norm*c_norm,
-    0), and the max_by ordering key is struct(ccos, -cell) — a
-    struct is never NULL, and a NULL field sorts BELOW every value
-    in struct comparison.  So a zero-norm CENTROID (NULL ccos
-    against every vector) loses to any non-NULL cosine, even a
-    negative one, and a zero-norm VECTOR (NULL ccos against every
-    centroid) ties on the NULL first field and resolves on the
-    -cell tiebreak: it gets the LOWEST cell id of ALL centroids,
-    zero-norm ones included.  With no centroids at all, the inner
-    join drops every row.  All four edges measured against the
-    Catalyst fold and pinned in tests/test_ann_recall.py."""
-    import numpy as np
-    import pandas as pd
-
-    rows = cents.orderBy("cell").collect()  # bounded: <= cells cap
-    all_cells = np.array([r["cell"] for r in rows], dtype="int64")
-    lowest_cell = int(all_cells.min()) if len(all_cells) else None
-    cu_t, cell_ids = None, all_cells[:0]
-    if rows:
-        c = np.array([r["cv"] for r in rows], dtype="float64")
-        c_norm = np.linalg.norm(c, axis=1)
-        valid = c_norm > 0  # zero-norm centroid: NULL ccos, loses ties
-        cell_ids = all_cells[valid]
-        c = c[valid]
-        c_norm = c_norm[valid]
-        if len(c):
-            cu_t = (c / c_norm[:, None]).T  # (d, k_valid)
-
-    def assign_batches(batches):
-        for pdf in batches:
-            if lowest_cell is None:
-                # no centroids: Catalyst's inner join yields nothing
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"][:0],
-                        "cell": np.array([], dtype="int64"),
-                    }
-                )
-                continue
-            v = np.vstack(pdf["embedding"].to_numpy()).astype("float64")
-            n = np.linalg.norm(v, axis=1)
-            if cu_t is None:
-                # every centroid zero-norm: all-NULL ccos row ->
-                # the -cell tiebreak picks the lowest cell
-                out = np.full(len(v), lowest_cell, dtype="int64")
-            else:
-                nz = n.copy()
-                nz[nz == 0] = 1.0
-                scores = (v / nz[:, None]) @ cu_t  # (b, k) cosines
-                best = scores.argmax(axis=1)  # first max = lowest cell
-                out = cell_ids[best]
-                # zero-norm vector: all-NULL ccos -> lowest cell
-                out[n == 0] = lowest_cell
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": out})
-
-    best_cell = e.select("vec_id", "embedding").mapInPandas(
-        assign_batches, "vec_id long, cell long"
     )
     return e.join(best_cell, "vec_id")
 
@@ -1451,17 +1384,12 @@ def _ddot(a, b) -> F.Column:
     )
 
 
-def ivfadc_residuals(
-    e: DataFrame, cents: DataFrame, fast_assign: bool = False
-) -> DataFrame:
+def ivfadc_residuals(e: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, norm, cell, rv): every vector's residual against
     its assigned coarse centroid, as a double array.  Broadcast
-    centroid join — map-side, no shuffle of the corpus.
-    fast_assign=True routes through the Arrow/BLAS assign twin
-    (scaled-cells serving path; registered forms keep the
-    oracle-mirrored Catalyst fold)."""
+    centroid join — map-side, no shuffle of the corpus."""
     return (
-        (ivf_assign_arrow if fast_assign else ivf_assign)(e, cents)
+        ivf_assign(e, cents)
         .join(F.broadcast(cents), "cell")
         .select(
             "vec_id",
@@ -1534,7 +1462,6 @@ def ivfadc_codes(resid: DataFrame, cb: DataFrame) -> DataFrame:
 def ivfadc_index(
     e: DataFrame,
     n_cells: int = N_CELLS,
-    fast_assign: bool = False,
     cents: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """(e_normed, cents, cb, codes): the complete IVFADC serving
@@ -1552,7 +1479,7 @@ def ivfadc_index(
         # scan.  Like the code index below, the centroid table IS a
         # stored artifact of a real IVFADC deployment.
         cents = ivf_centroids(en, n_cells).cache()
-    resid = ivfadc_residuals(en, cents, fast_assign)
+    resid = ivfadc_residuals(en, cents)
     # cache the residual codebook (round 14): M x K rows, but its
     # lineage is a full assign + residual pass (TakeOrdered over the
     # resid relation) — its second consumer (the query LUT build in
@@ -1862,14 +1789,13 @@ def ivfadc_scored_from(
     e: DataFrame,
     n_cells: int = N_CELLS,
     n_probe: int = N_PROBE,
-    fast_assign: bool = False,
 ) -> DataFrame:
     """All ADC-scored (q_id, n_id, adc) candidate pairs of the
     IVFADC index — the shared stage behind ann_ivfadc_topk (top-5
     cut) and ann_ivfadc_rerank (budget cut + exact rescore), so the
     two pipelines cannot drift.  Builds the index inline; see
     ivfadc_scored_from_index for the index-sharing form."""
-    en, cents, cb, codes = ivfadc_index(e, n_cells, fast_assign)
+    en, cents, cb, codes = ivfadc_index(e, n_cells)
     return ivfadc_scored_from_index(en, cents, cb, codes, n_probe)
 
 
@@ -2307,7 +2233,6 @@ def binary_hamming_cands_from(
     n_cells: int = N_CELLS,
     n_probe: int = N_PROBE,
     margin: int = RERANK_MARGIN,
-    fast_assign: bool = False,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """(q_id, n_id) candidates from the binary index: IVF coarse
@@ -2316,11 +2241,6 @@ def binary_hamming_cands_from(
     the packed sign words (bit_count(xor) on two bigints — pure
     integer whole-stage-codegen arithmetic, no float and no UDF),
     cut to the data-derived adaptive budget (broadcast 1-row).
-
-    fast_assign=True swaps the Catalyst assign for the Arrow/BLAS
-    twin (:func:`ivf_assign_arrow`) — the scaled-cells serving
-    path; registered fixture forms keep the default (the
-    oracle-mirrored fold).
 
     Scale shape: the scan side reads 8 bytes/vector + the cell id;
     the probe join is keyed by cell (n*q*probe/cells pairs, AQE
@@ -2338,7 +2258,7 @@ def binary_hamming_cands_from(
     e = e.select("vec_id", "embedding", l2("embedding").alias("norm"))
     if cents is None:
         cents = ivf_centroids(e, n_cells)
-    assigned = (ivf_assign_arrow if fast_assign else ivf_assign)(e, cents)
+    assigned = ivf_assign(e, cents)
     # cache the BINARY INDEX: its three consumers below (collision
     # budget, query-word lookup, candidate scan) would each replay
     # the coarse assign (the O(n*cells*dim) fold) + sign packing —

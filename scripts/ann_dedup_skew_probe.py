@@ -50,7 +50,7 @@ from db_mapreduce_project_spark.operators.similarity import (
     binary_hamming_cands_from,
     binary_sign_codes,
     derive_n_cells,
-    ivf_assign_arrow,
+    ivf_assign,
     signword_dedup_survivors,
     signword_suppressed,
     train_ivf_centroids,
@@ -114,7 +114,7 @@ def leg(spark, rel, tag: str) -> dict:
     t0 = time.perf_counter()
     cents = train_ivf_centroids(rel, cells)
     en = rel.select("vec_id", "embedding", l2("embedding").alias("norm"))
-    bcodes = binary_sign_codes(ivf_assign_arrow(en, cents))
+    bcodes = binary_sign_codes(ivf_assign(en, cents))
     bud = binary_collision_budget(
         bcodes, RERANK_C_CAP, RERANK_MARGIN
     ).collect()[0]
@@ -136,7 +136,6 @@ def leg(spark, rel, tag: str) -> dict:
         n_cells=cells,
         n_probe=PROBE,
         margin=RERANK_MARGIN,
-        fast_assign=True,
         cents=cents,
     )
     got = split_recall(exact_rerank_tail(rel, cands), exact)

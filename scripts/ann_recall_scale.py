@@ -43,10 +43,10 @@ under scaled per-cell occupancy: 100k -> 256, 500k -> 512,
 Round-12 additions (VERDICT r11 #1/#2):
   * binary_hamming_rerank_trained / ivfadc_rerank_adaptive_trained —
     the serving paths under a TRAINED coarse quantizer
-    (train_ivf_centroids: spherical k-means++ on a bounded sample)
-    with the Arrow/BLAS assign, each rung recording the per-cell
-    occupancy histogram (max/mean/p99/empty) alongside recall — the
-    cluster-tier configuration SCALE.md's design notes name;
+    (train_ivf_centroids: spherical k-means++ on a bounded sample),
+    each rung recording the per-cell occupancy histogram
+    (max/mean/p99/empty) alongside recall — the cluster-tier
+    configuration SCALE.md's design notes name;
   * mrl_rerank_adaptive — the MRL serving form under the
     truncated-sign-word collision budget (closing the fixed cut's
     worst_query_recall 0.0 at 500k/1M).
@@ -497,33 +497,10 @@ def main() -> None:
                 },
             )
 
-        if want("mrl_rerank_adaptive_blas_assign"):
-            # the MRL adaptive serving form with the Arrow/BLAS
-            # assign on the truncated vectors — completes the BLAS
-            # story across all three decision-table forms
-            record(
-                "mrl_rerank_adaptive_blas_assign",
-                {
-                    "dims": MRL_DIM,
-                    "cells": cells,
-                    "probe": probe,
-                    "rerank_c": "adaptive",
-                    "margin": RERANK_MARGIN,
-                    "assign": "ivf_assign_arrow on the truncated "
-                    "prefix (float64 BLAS matmul per Arrow batch)",
-                },
-                measure(
-                    mrl_rerank_from(
-                        rung, None, cells, probe, fast_assign=True
-                    ),
-                    exact,
-                ),
-            )
-
         # trained coarse quantizer (VERDICT r11 #1): k-means++
-        # centroids from a bounded sample + the Arrow/BLAS assign —
-        # the cluster-tier configuration — with the per-cell
-        # occupancy histogram recorded alongside recall
+        # centroids from a bounded sample — the cluster-tier
+        # configuration — with the per-cell occupancy histogram
+        # recorded alongside recall
         trained_paths = [
             p
             for p in (
@@ -535,7 +512,7 @@ def main() -> None:
         if trained_paths:
             from db_mapreduce_project_spark.functions.vectors import l2
             from db_mapreduce_project_spark.operators.similarity import (
-                ivf_assign_arrow,
+                ivf_assign,
                 train_ivf_centroids,
             )
 
@@ -547,7 +524,7 @@ def main() -> None:
             )
             t0 = time.perf_counter()
             occ = (
-                ivf_assign_arrow(en, cents)
+                ivf_assign(en, cents)
                 .groupBy("cell")
                 .count()
                 .agg(
@@ -580,7 +557,7 @@ def main() -> None:
                     "rerank_c": "adaptive",
                     "margin": RERANK_MARGIN,
                     "quantizer": "train_ivf_centroids (spherical "
-                    "k-means++, bounded sample) + ivf_assign_arrow",
+                    "k-means++, bounded sample) + ivf_assign",
                     "occupancy": occupancy,
                     "state": {
                         "sign_bytes": n * 8,
@@ -595,7 +572,6 @@ def main() -> None:
                             n_cells=cells,
                             n_probe=probe,
                             margin=RERANK_MARGIN,
-                            fast_assign=True,
                             cents=cents,
                         ),
                     ),
@@ -612,7 +588,7 @@ def main() -> None:
                     "rerank_c": "adaptive",
                     "margin": RERANK_MARGIN,
                     "quantizer": "train_ivf_centroids (spherical "
-                    "k-means++, bounded sample) + ivf_assign_arrow",
+                    "k-means++, bounded sample) + ivf_assign",
                     "occupancy": occupancy,
                     "state": state,
                 },
@@ -622,7 +598,6 @@ def main() -> None:
                         None,
                         cells,
                         probe,
-                        fast_assign=True,
                         cents=cents,
                     ),
                     exact,

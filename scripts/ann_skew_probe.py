@@ -16,7 +16,7 @@ Rung (deterministic, ~200k vectors):
   * COLD remainder: the standard expand geometry over the other
     1999 identities (25 copies, noise 0.02).
 
-Measured for the binary Hamming serving path (BLAS assign) under
+Measured for the binary Hamming serving path under
 (a) the deterministic lowest-vec_id quantizer and (b)
 train_ivf_centroids, at derive_n_cells(n) cells:
   * per-cell occupancy (max/mean/p99/empty) — the r11 worry made
@@ -52,7 +52,7 @@ from db_mapreduce_project_spark.operators.similarity import (
     TOPK,
     binary_hamming_cands_from,
     derive_n_cells,
-    ivf_assign_arrow,
+    ivf_assign,
     ivf_centroids,
     train_ivf_centroids,
 )
@@ -190,7 +190,7 @@ def main() -> None:
             else ivf_centroids(en, cells)
         )
         occ = (
-            ivf_assign_arrow(en, cents)
+            ivf_assign(en, cents)
             .groupBy("cell")
             .count()
             .agg(
@@ -208,7 +208,6 @@ def main() -> None:
             n_cells=cells,
             n_probe=probe,
             margin=RERANK_MARGIN,
-            fast_assign=True,
             cents=cents,
         )
         got = measure(exact_rerank_tail(rung, cands), exact)

@@ -1029,102 +1029,15 @@ def test_ann_recall_r11_scaled_cells_floors():
         assert bi["worst_query_recall"] == 1.0, (n, bi)
 
 
-def test_ivf_assign_arrow_matches_catalyst(spark):
-    """The Arrow/BLAS assign twin (round 11) computes the IDENTICAL
-    nearest-centroid argmax as the Catalyst fold on the embeddings
-    fixture — same tie-break (highest ccos, then lowest cell, via
-    ascending-cell layout + first-max argmax).  Exact-tie ulp
-    divergence is possible in principle (BLAS reorders partial
-    sums), which is why registered forms keep the Catalyst fold;
-    this pins that the twins agree everywhere on real data."""
-    from db_mapreduce_project_spark.io import load_table
+def test_ivf_assign_zero_norm_edges(spark):
+    """ivf_assign's MEASURED zero-norm semantics (see its
+    docstring): the max_by key is struct(ccos, -cell) — never NULL
+    as a whole, NULL field sorting BELOW every value — so a
+    zero-norm vector gets the LOWEST cell id (all-NULL tie resolved
+    by -cell, zero-norm centroids included) and a zero-norm
+    centroid loses to any non-NULL cosine, even a negative one."""
     from db_mapreduce_project_spark.operators.similarity import (
         ivf_assign,
-        ivf_assign_arrow,
-        ivf_centroids,
-        l2,
-    )
-
-    e = load_table(spark, SF, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    e = e.select("vec_id", "embedding", l2("embedding").alias("norm"))
-    cents = ivf_centroids(e, 32)
-    a = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign(e, cents).select("vec_id", "cell").collect()
-    }
-    b = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign_arrow(e, cents)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert a == b
-
-
-def test_binary_blas_assign_1m_artifact_floor():
-    """Round-11 close-out (ANN_RECALL_r11.json): the binary serving
-    path with the Arrow/BLAS assign at the scaled 1M/1024-cell
-    geometry holds recall 1.0 / worst_query_recall 1.0 while
-    cutting the Catalyst-assign wall 412.7 -> 57.5 s — the sqrt(n)
-    cell geometry is wall-superior once the assign is a matmul,
-    which is the configuration a cluster serving tier runs."""
-    import json
-    import os
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "ANN_RECALL_r11.json"
-    )
-    rows = json.load(open(path))["measurements"]
-    got = [
-        r
-        for r in rows
-        if r["path"] == "binary_hamming_rerank_blas_assign"
-        and "(1000000 vectors)" in r["corpus"]
-    ]
-    assert len(got) == 1, got
-    r = got[0]
-    assert r["params"]["cells"] == 1024
-    assert r["recall"] == 1.0, r
-    assert r["worst_query_recall"] == 1.0, r
-    slow = [
-        x
-        for x in rows
-        if x["path"] == "binary_hamming_rerank"
-        and "(1000000 vectors)" in x["corpus"]
-        and x["params"].get("cells") == 1024
-    ]
-    assert slow and r["sec"] < 0.5 * slow[0]["sec"], (
-        r["sec"],
-        slow[0]["sec"],
-    )
-    # the quantized form follows via the same threaded flag: 1.0/1.0
-    # at a fraction of its Catalyst-assign wall, and binary stays
-    # the faster default
-    adc = [
-        x
-        for x in rows
-        if x["path"] == "ivfadc_rerank_adaptive_blas_assign"
-        and "(1000000 vectors)" in x["corpus"]
-    ]
-    assert len(adc) == 1
-    assert adc[0]["recall"] == 1.0 and adc[0]["worst_query_recall"] == 1.0
-    assert r["sec"] < adc[0]["sec"], (r["sec"], adc[0]["sec"])
-
-
-def test_ivf_assign_arrow_zero_norm_edges(spark):
-    """Round-12 ADVICE: the Arrow twin must mirror the MEASURED
-    Catalyst zero-norm semantics, not idealized ones.  Measured on
-    this exact fixture (see ivf_assign_arrow's docstring): the
-    max_by key is struct(ccos, -cell) — never NULL as a whole, NULL
-    field sorting BELOW every value — so a zero-norm vector gets
-    the LOWEST cell id (all-NULL tie resolved by -cell, zero-norm
-    centroids included) and a zero-norm centroid loses to any
-    non-NULL cosine, even a negative one."""
-    from db_mapreduce_project_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_arrow,
         ivf_centroids,
         l2,
     )
@@ -1143,14 +1056,6 @@ def test_ivf_assign_arrow_zero_norm_edges(spark):
         r["vec_id"]: r["cell"]
         for r in ivf_assign(e, cents).select("vec_id", "cell").collect()
     }
-    arw = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign_arrow(e, cents)
-        .select("vec_id", "cell")
-        .collect()
-    }
-    assert cat == arw, (cat, arw)
-    # pin the measured semantics themselves, not just twin equality
     assert cat[10] == 0  # zero-norm vector -> lowest cell
     assert cat[11] == 1  # zero centroid loses to a NEGATIVE cosine
     assert cat[12] == 1
@@ -1164,39 +1069,29 @@ def test_ivf_assign_arrow_zero_norm_edges(spark):
         r["vec_id"]: r["cell"]
         for r in ivf_assign(e, zc).select("vec_id", "cell").collect()
     }
-    arw2 = {
-        r["vec_id"]: r["cell"]
-        for r in ivf_assign_arrow(e, zc).select("vec_id", "cell").collect()
-    }
-    assert cat2 == arw2, (cat2, arw2)
     assert set(cat2.values()) == {7}
 
     # empty centroid set: the inner join drops every row
     empty = zc.where("cell < 0")
     assert ivf_assign(e, empty).count() == 0
-    assert ivf_assign_arrow(e, empty).count() == 0
 
 
-def test_fast_assign_twins_match_oracled_forms(spark):
-    """Round-12 (VERDICT r11 #4): the registered fast-assign
-    serving twins return row-for-row the SAME result as their
-    fully-oracled siblings on the parity fixture — the rows-only
-    twins' correctness contract (the sibling's value-hash parity
-    transfers through this equality; recall at corpus scale is
-    certified in the ANN_RECALL ladder's blas_assign rows)."""
+def test_fast_names_run_sibling_functions():
+    """The `_fast` serving names stay registered for bench.py,
+    rows-only, and run their oracled sibling's function object: one
+    coarse assign serves both."""
     from db_mapreduce_project_spark import registry
 
     registry.load_all_queries()
-
-    def rows(name):
-        return sorted(
-            map(tuple, registry.QUERIES[name](spark, SF).collect())
-        )
-
-    assert rows("ann_binary_hamming_rerank_fast") == rows(
-        "ann_binary_hamming_rerank"
-    )
-    assert rows("ann_ivfadc_rerank_fast") == rows("ann_ivfadc_rerank")
+    for sibling in (
+        "ann_binary_hamming_rerank",
+        "ann_ivfadc_rerank",
+        "ann_mrl_rerank_adaptive",
+    ):
+        fast = sibling + "_fast"
+        assert registry.QUERIES[fast] is registry.QUERIES[sibling], fast
+        assert fast not in registry.ORACLES
+        assert sibling in registry.ORACLES
 
 
 def test_mrl_adaptive_budget_beats_fixed_cut_on_clone_families(spark):
@@ -1267,9 +1162,9 @@ def test_mrl_adaptive_budget_beats_fixed_cut_on_clone_families(spark):
 def test_trained_quantizer_recall_and_occupancy(spark):
     """Round-12 (VERDICT r11 #1): Lloyd-trained coarse centroids
     (spherical k-means++ on a bounded deterministic sample) drive
-    the binary serving path through the Arrow/BLAS assign at full
-    recall on the clone corpus, with balanced cells — the
-    configuration every 1M-rung certification now also runs
+    the binary serving path at full recall on the clone corpus,
+    with balanced cells — the configuration every 1M-rung
+    certification now also runs
     (ANN_RECALL_r12.json trained rows).  Measured here (80k
     vectors, 64 cells, probe 8): recall 1.0 / worst 1.0, all 64
     cells live, max/mean occupancy 1.79 (pinned loosely)."""
@@ -1317,7 +1212,6 @@ def test_trained_quantizer_recall_and_occupancy(spark):
                 n_cells=64,
                 n_probe=8,
                 margin=RERANK_MARGIN,
-                fast_assign=True,
                 cents=cents,
             ),
         ),
@@ -1330,8 +1224,8 @@ def test_trained_quantizer_recall_and_occupancy(spark):
 
 def test_ann_recall_r12_trained_and_mrl_adaptive_floors():
     """Round-12 ladder (ANN_RECALL_r12.json): the trained coarse
-    quantizer (k-means++ sample training + BLAS assign — VERDICT
-    r11 #1) and the MRL adaptive cut (VERDICT r11 #2) both read
+    quantizer (k-means++ sample training, measured with a BLAS
+    assign since removed — VERDICT r11 #1) and the MRL adaptive cut (VERDICT r11 #2) both read
     recall 1.0 / worst_query_recall 1.0 at every rung under
     data-derived sqrt(n) cells, with the trained index's per-cell
     occupancy balanced (zero empty cells, max/mean <= 3) — closing
@@ -1401,62 +1295,6 @@ def test_trained_registered_form_fixture_floor(spark):
     )
     assert got["recall"] >= 0.45, got
     assert got["recall"] >= base["recall"], (got, base)
-
-
-def test_mrl_fast_assign_matches_catalyst_form(spark):
-    """The MRL adaptive pipeline with the BLAS assign on the
-    truncated prefix returns row-for-row the SAME result as the
-    Catalyst-fold form on the parity fixture — the same
-    twin-equality contract as the binary/IVFADC fast twins."""
-    from db_mapreduce_project_spark.operators.retrieval import (
-        mrl_rerank_from,
-    )
-
-    e = _embeddings(spark)
-    slow = sorted(map(tuple, mrl_rerank_from(e, None).collect()))
-    fast = sorted(
-        map(tuple, mrl_rerank_from(e, None, fast_assign=True).collect())
-    )
-    assert slow == fast
-
-
-def test_mrl_blas_assign_artifact_floors():
-    """Round-12 close-out: the MRL adaptive serving form with the
-    BLAS assign on the truncated prefix holds recall 1.0 / worst
-    1.0 at 500k and 1M while reading 26.8 / 40.7 s — cheaper than
-    the fixed cut ever was (173.4 s at 1M), making the recall SLA
-    free on matryoshka-trained data and this the fastest certified
-    serving form in the family at the 1M rung."""
-    import json
-    import os
-
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "ANN_RECALL_r12.json"
-    )
-    rows = json.load(open(path))["measurements"]
-    for n in (500_000, 1_000_000):
-        got = [
-            r
-            for r in rows
-            if r["path"] == "mrl_rerank_adaptive_blas_assign"
-            and f"({n} vectors)" in r["corpus"]
-        ]
-        assert len(got) == 1, (n, got)
-        assert got[0]["recall"] == 1.0, got
-        assert got[0]["worst_query_recall"] == 1.0, got
-    m1 = [
-        r
-        for r in rows
-        if r["path"] == "mrl_rerank_adaptive_blas_assign"
-        and "(1000000 vectors)" in r["corpus"]
-    ][0]
-    slow = [
-        r
-        for r in rows
-        if r["path"] == "mrl_rerank_adaptive"
-        and "(1000000 vectors)" in r["corpus"]
-    ][0]
-    assert m1["sec"] < 0.5 * slow["sec"], (m1["sec"], slow["sec"])
 
 
 def test_ann_skew_probe_artifact_floors():
@@ -1638,12 +1476,8 @@ def test_trained_twins_registered_fixture_floors(spark):
     e = _embeddings(spark)
     exact = top_map(brute_topk_from(e).collect())
     for trained, sibling, slack in (
-        ("ann_ivfadc_rerank_trained", "ann_ivfadc_rerank_fast", 0.10),
-        (
-            "ann_mrl_rerank_adaptive_trained",
-            "ann_mrl_rerank_adaptive_fast",
-            0.10,
-        ),
+        ("ann_ivfadc_rerank_trained", "ann_ivfadc_rerank", 0.10),
+        ("ann_mrl_rerank_adaptive_trained", "ann_mrl_rerank_adaptive", 0.10),
     ):
         df = registry.QUERIES[trained](spark, SF)
         assert [f.name for f in df.schema.fields] == [

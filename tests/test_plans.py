@@ -296,6 +296,10 @@ _UNKEYED_JOIN_OK = {
     "ann_ivf_filtered",         # same centroid broadcasts
     "ann_mrl_rerank",           # same centroid broadcasts (truncated dims)
     "ann_mrl_rerank_adaptive",  # same + 1-row sign-word budget broadcast
+    # the `_fast` names run their sibling's function
+    "ann_binary_hamming_rerank_fast",
+    "ann_ivfadc_rerank_fast",
+    "ann_mrl_rerank_adaptive_fast",
     "sketch_kmv_distinct",      # 1-row sketch x 1-row exact-count join
     "unigram_piece_probs",      # 1-row corpus-total + piece-table broadcasts
     "unigram_segment_words",    # same piece-table broadcasts
@@ -327,18 +331,11 @@ _EAGER = {
     # localCheckpoints the fingerprint table so the band self-join
     # does not run the JPEG+pHash kernel once per side
     "multimodal_phash_hamming_pairs",
-    # ivf_assign_arrow collects the bounded centroid table at plan
-    # construction (the BLAS closure); plans otherwise match their
-    # oracled siblings', whose shapes the sweep already covers
-    "ann_binary_hamming_rerank_fast",
-    "ann_ivfadc_rerank_fast",
-    # + the bounded k-means training sample collect
+    # trained twins: the bounded k-means training sample collect at
+    # plan construction, then the same centroid/codebook + 1-row
+    # budget broadcasts as their oracled siblings (in
+    # _UNKEYED_JOIN_OK)
     "ann_binary_hamming_rerank_trained",
-    "ann_mrl_rerank_adaptive_fast",
-    # round-13 trained twins: same bounded training collect at plan
-    # construction, same centroid/codebook + 1-row budget broadcasts
-    # as their oracled siblings (ann_ivfadc_rerank /
-    # ann_mrl_rerank_adaptive in _UNKEYED_JOIN_OK)
     "ann_ivfadc_rerank_trained",
     "ann_mrl_rerank_adaptive_trained",
 }
