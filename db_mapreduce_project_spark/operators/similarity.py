@@ -20,7 +20,9 @@ array, broadcast implicitly inside the expression.
 
 from __future__ import annotations
 
+import operator
 import random
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1147,12 +1149,17 @@ RERANK_C_FLOOR = 25  # minimum exact-rerank candidates per query
 RERANK_C_CAP = 4096  # adaptive-budget ceiling (bounds the exact stage)
 
 
-def _dsub(col, m: int) -> F.Column:
-    """m-th double-cast subvector of an array<float> column."""
-    return F.slice(
-        F.transform(col, lambda v: v.cast("double")),
-        m * PQ_SUB + 1,
-        PQ_SUB,
+def _as_double(col) -> F.Column:
+    """A float array column cast element-wise to double."""
+    return F.transform(col, lambda v: v.cast("double"))
+
+
+def _subvectors(col) -> F.Column:
+    """The PQ_M subvectors of a double array column, as one array
+    ordered by subquantizer m (posexplode it for (m, subvector)
+    rows)."""
+    return F.array(
+        *[F.slice(col, m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)]
     )
 
 
@@ -1163,108 +1170,181 @@ def _sqdist(a, b) -> F.Column:
     return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def pq_codebook(e: DataFrame) -> DataFrame:
+def _ddot(a, b) -> F.Column:
+    """Ordered-fold dot over two double arrays (no cast — the
+    zip_with cast in functions.vectors.dot is for float inputs)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+# The one PQ core: codebook, encoder, packed codes, query LUTs and
+# the LUT sum.  ann_pq_adc runs it over the raw vectors (skip 0);
+# the IVFADC family runs it over the coarse residuals (skip n_cells).
+
+
+def pq_codebook(vecs: DataFrame, skip: int = 0) -> DataFrame:
     """(m, k, cw): codeword k of subquantizer m is the m-th
-    subvector of the k-th-lowest vec_id — the same honest
-    deterministic 'training' as the IVF centroids (real systems run
-    per-subspace k-means; determinism is what buys the cross-engine
-    oracle, and the assignment/scoring machinery is identical)."""
+    subvector `v` of the (skip + k)-th-lowest vec_id of `vecs`
+    (vec_id, v array<double>) — honest deterministic 'training'
+    (real systems run per-subspace k-means; determinism is what
+    buys the cross-engine oracle, and the assignment/scoring
+    machinery is identical).  The IVFADC residual codebook skips
+    the n_cells lowest vec_ids: they are the centroids themselves,
+    whose residuals are identically zero — training on them would
+    collapse every codeword to the origin and the ADC term to a
+    constant."""
     w = Window.orderBy("vec_id")
     return (
-        e.orderBy("vec_id")
-        .limit(PQ_K)
-        .withColumn("k", F.row_number().over(w) - 1)
+        # limit BEFORE the global-window row_number so the
+        # single-partition WindowExec sees <= skip + PQ_K rows,
+        # never the corpus
+        vecs.orderBy("vec_id")
+        .limit(skip + PQ_K)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") > skip)
         .select(
-            "k",
-            F.posexplode(
-                F.array(*[_dsub("embedding", m) for m in range(PQ_M)])
-            ).alias("m", "cw"),
+            (F.col("rn") - skip - 1).alias("k"),
+            F.posexplode(_subvectors(F.col("v"))).alias("m", "cw"),
         )
     )
 
 
-def pq_codes(
-    e: DataFrame, n_planes: int = N_PLANES, cb: DataFrame | None = None
-) -> DataFrame:
-    """The PQ index: (n_id, bucket, m, k) — 8 one-nibble codes per
-    vector (PQ_K=16), an 8x smaller index than SQ8's 64 bytes.
-    Assignment is per-(vector, subspace) argmin over the BROADCAST
-    codebook — one map-side pass over the corpus, no shuffle of the
-    vectors.  The argmin is a map-side-combining min_by with the
-    (d2 ASC, k ASC) struct tiebreak (round 14; the former
-    row_number window shuffled the whole n x M x K expansion —
-    ivfadc_codes' comment explains why the aggregate shape is the
-    scale-correct one; the min_by struct order is the identical
-    deterministic argmin the oracle mirrors)."""
-    subs = e.select(
+def pq_codes(vecs: DataFrame, cb: DataFrame) -> DataFrame:
+    """The PQ index of `vecs` (vec_id, v array<double>, *extra):
+    (n_id, *extra, m, k) — PQ_M one-nibble codes per vector
+    (PQ_K=16), an 8x smaller index than SQ8's 64 bytes.  The
+    caller's extra columns (the LSH bucket; the IVFADC norm and
+    cell) ride through unchanged.  Assignment is the
+    per-(vector, subspace) argmin of squared L2 over the BROADCAST
+    codebook: a map-side-combining groupBy(n_id, m) min_by with the
+    (d2 ASC, k ASC) struct tiebreak the oracles mirror — one
+    map-side pass over the corpus, no shuffle of the vectors beyond
+    the partial-agg combine (a row_number window would shuffle the
+    whole n x M x K expansion)."""
+    extra = [c for c in vecs.columns if c not in ("vec_id", "v")]
+    subs = vecs.select(
         F.col("vec_id").alias("n_id"),
-        _bucket_expr("embedding", n_planes).alias("bucket"),
-        F.posexplode(
-            F.array(*[_dsub("embedding", m) for m in range(PQ_M)])
-        ).alias("m", "sv"),
+        *extra,
+        F.posexplode(_subvectors(F.col("v"))).alias("m", "sv"),
     )
-    if cb is None:
-        cb = pq_codebook(e)
     return (
         subs.join(F.broadcast(cb), "m")
         .withColumn("d2", _sqdist("sv", "cw"))
         .groupBy("n_id", "m")
         .agg(
             F.min_by("k", F.struct(F.col("d2"), F.col("k"))).alias("k"),
-            F.first("bucket").alias("bucket"),
+            *[F.first(c).alias(c) for c in extra],
         )
-        .select("n_id", "bucket", "m", "k")
+        .select("n_id", *extra, "m", "k")
     )
+
+
+def pq_codes_packed(codes: DataFrame) -> DataFrame:
+    """One row per indexed vector: (n_id, *extra,
+    ks array<int>[PQ_M]) — the nibble codes of a pq_codes relation
+    packed into a single array ordered by subquantizer m.  This is
+    the layout real PQ indexes store (codes are CONTIGUOUS per
+    vector) and the layout ADC scoring wants: one candidate row per
+    (query, vector) pair instead of PQ_M.  Cost: one groupBy over
+    the PQ_M-rows/vector code relation — index-build time,
+    amortized across every query."""
+    extra = [c for c in codes.columns if c not in ("n_id", "m", "k")]
+    return codes.groupBy("n_id").agg(
+        *[F.first(c).alias(c) for c in extra],
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("m", "k"))),
+            lambda s: s.k,
+        ).alias("ks"),
+    )
+
+
+def pq_query_luts(e: DataFrame, cb: DataFrame) -> DataFrame:
+    """Per-query ADC lookup table: (q_id, lut array<array<long>>)
+    where lut[m][k] = floor(<q_m, cw[m][k]> * SCALE + 0.5) — the
+    classic per-query M x K distance table of Jégou et al. (TPAMI
+    2011 §IV.A), built once per query of `e` (vec_id, embedding)
+    against the broadcast codebook (|q| * M * K rows, metadata
+    scale) and itself broadcast to the candidate scan.  Entries are
+    quantized bigints, so a pair's score (:func:`pq_lut_sum`) is an
+    exact integer whatever the order of its terms — the sum the
+    oracles take with a GROUP BY."""
+    qsubs = e.where(F.col("vec_id") % QUERY_MOD == 0).select(
+        F.col("vec_id").alias("q_id"),
+        F.posexplode(_subvectors(_as_double("embedding"))).alias("m", "qsv"),
+    )
+    per_mk = qsubs.join(F.broadcast(cb), "m").select(
+        "q_id",
+        "m",
+        "k",
+        F.floor(_ddot("qsv", "cw") * PQ_ADC_SCALE + F.lit(0.5))
+        .cast("long")
+        .alias("val"),
+    )
+    per_m = per_mk.groupBy("q_id", "m").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("k", "val"))),
+            lambda s: s.val,
+        ).alias("row")
+    )
+    return per_m.groupBy("q_id").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("m", "row"))),
+            lambda s: s.row,
+        ).alias("lut")
+    )
+
+
+def pq_lut_sum() -> F.Column:
+    """sum_m lut[m][ks[m]] over a row carrying a query's `lut`
+    (pq_query_luts) and a candidate's packed codes `ks`
+    (pq_codes_packed): an unrolled PQ_M-term bigint sum of
+    exact integers — PQ_M array lookups per candidate, no
+    per-pair re-aggregation."""
+    lookups = [
+        F.element_at(F.element_at("lut", m + 1), F.element_at("ks", m + 1) + 1)
+        for m in range(PQ_M)
+    ]
+    return reduce(operator.add, lookups)
 
 
 def pq_adc_from(e: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     """PQ asymmetric-distance top-TOPK: LSH-bucketed candidates
-    scored by table lookup — the query's m-th subvector dotted with
-    the candidate's m-th CODEWORD (the original vector is never
-    read after encoding; the whole serving index is codes +
-    codebook).  Per-(q, m) partials quantize to bigints before the
-    per-pair sum, so the 8-way addition is order-free and the
-    pipeline value-hash matches the oracle (the repo's
-    quantize-then-sum discipline for floats under groupBy)."""
-    q = sq8_queries(e, n_planes)
-    qsubs = q.select(
-        "q_id",
-        "bucket",
-        F.posexplode(
-            F.array(*[_dsub("qv", m) for m in range(PQ_M)])
-        ).alias("m", "qsv"),
+    scored by table lookup.  The corpus is encoded once into packed
+    codes (one row per vector); each query's M x K lookup table of
+    its subvectors dotted with every codeword is built once and
+    broadcast; a (query, candidate) pair in the same bucket scores
+    as the sum of PQ_M lookups lut[m][code_m] — the original vector
+    is never read after encoding, the whole serving index is codes
+    + codebook.  LUT entries are quantized bigints, so the score is
+    an exact integer / SCALE and the pipeline value-hash matches
+    the oracle's GROUP BY sum of the same terms."""
+    vecs = e.select(
+        "vec_id",
+        _as_double("embedding").alias("v"),
+        _bucket_expr("embedding", n_planes).alias("bucket"),
     )
     # cache the codebook (round 14): M x K rows behind a
     # TakeOrdered-over-the-corpus lineage, consumed by BOTH the
-    # encode argmin and the ADC lookup join — the stored-artifact
+    # encode argmin and the LUT build — the stored-artifact
     # discipline of ivfadc_index
-    cb = pq_codebook(e).cache()
-    parts = (
-        qsubs.join(pq_codes(e, n_planes, cb=cb), ["bucket", "m"])
-        .where(F.col("q_id") != F.col("n_id"))
-        .join(F.broadcast(cb), ["m", "k"])
-        .select(
-            "q_id",
-            "n_id",
-            F.floor(
-                F.aggregate(
-                    F.zip_with("qsv", "cw", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                * PQ_ADC_SCALE
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("pq"),
-        )
-    )
+    cb = pq_codebook(vecs).cache()
     w = Window.partitionBy("q_id").orderBy(
         F.col("adc").desc(), F.col("n_id").asc()
     )
     return (
-        parts.groupBy("q_id", "n_id")
-        .agg((F.sum("pq") / F.lit(float(PQ_ADC_SCALE))).alias("adc"))
+        sq8_queries(e, n_planes)
+        .select("q_id", "bucket")
+        .join(pq_codes_packed(pq_codes(vecs, cb)), "bucket")
+        .where(F.col("q_id") != F.col("n_id"))
+        .join(F.broadcast(pq_query_luts(e, cb)), "q_id")
+        .select(
+            "q_id",
+            "n_id",
+            (pq_lut_sum() / F.lit(float(PQ_ADC_SCALE))).alias("adc"),
+        )
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= TOPK)
         .select("q_id", "n_id", "adc", "rk")
@@ -1368,95 +1448,26 @@ register("ann_pq_adc", ann_pq_adc, ANN_PQ_ADC_ORACLE)
 # ---------------------------------------------------------------
 
 
-def _dslice(col, m: int) -> F.Column:
-    """m-th subvector of an already-double array column (residuals
-    are born double; contrast _dsub, which casts float inputs)."""
-    return F.slice(col, m * PQ_SUB + 1, PQ_SUB)
-
-
-def _ddot(a, b) -> F.Column:
-    """Ordered-fold dot over two double arrays (no cast — the
-    zip_with cast in functions.vectors.dot is for float inputs)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def ivfadc_residuals(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, norm, cell, rv): every vector's residual against
-    its assigned coarse centroid, as a double array.  Broadcast
-    centroid join — map-side, no shuffle of the corpus."""
+    """(vec_id, n_norm, cell, v): every vector's residual `v`
+    against its assigned coarse centroid, as a double array — the
+    input of the shared pq_codebook / pq_codes, whose code index
+    carries the norm and cell through.  Broadcast centroid join —
+    map-side, no shuffle of the corpus."""
     return (
         ivf_assign(e, cents)
         .join(F.broadcast(cents), "cell")
         .select(
             "vec_id",
-            "norm",
+            F.col("norm").alias("n_norm"),
             "cell",
             F.zip_with(
                 "embedding",
                 "cv",
                 lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("rv"),
+            ).alias("v"),
         )
     )
-
-
-def ivfadc_codebook(resid: DataFrame, n_cells: int) -> DataFrame:
-    """(m, k, cw): residual codeword k of subquantizer m — the m-th
-    residual subvector of the (n_cells + k)-th-lowest vec_id.  The
-    codebook is trained on residuals AFTER the centroid rows: the
-    n_cells lowest vec_ids are the centroids themselves, whose
-    residuals are identically zero — training on them would
-    collapse every codeword to the origin and the ADC term to a
-    constant.  (Real systems run k-means on sampled residuals; the
-    deterministic pick keeps the cross-engine oracle, and the
-    encode/serve machinery is identical.)"""
-    w = Window.orderBy("vec_id")
-    return (
-        # limit BEFORE the global-window row_number so the
-        # single-partition WindowExec sees <= n_cells + PQ_K rows,
-        # never the corpus (the pq_codebook discipline)
-        resid.orderBy("vec_id")
-        .limit(n_cells + PQ_K)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") > n_cells)
-        .select(
-            (F.col("rn") - n_cells - 1).alias("k"),
-            F.posexplode(
-                F.array(*[_dslice(F.col("rv"), m) for m in range(PQ_M)])
-            ).alias("m", "cw"),
-        )
-    )
-
-
-def ivfadc_codes(resid: DataFrame, cb: DataFrame) -> DataFrame:
-    """The serving index: (n_id, n_norm, cell, m, k) — per-subspace
-    argmin of squared L2 to the broadcast residual codebook.  The
-    argmin is a map-side-combining groupBy(n_id, m) min_by over the
-    n*M*K expansion (the ivf_assign shape), NOT a window — no
-    shuffle of the expansion beyond the partial-agg combine."""
-    subs = resid.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("norm").alias("n_norm"),
-        "cell",
-        F.posexplode(
-            F.array(*[_dslice(F.col("rv"), m) for m in range(PQ_M)])
-        ).alias("m", "sv"),
-    )
-    best = (
-        subs.join(F.broadcast(cb), "m")
-        .withColumn("d2", _sqdist("sv", "cw"))
-        .groupBy("n_id", "m")
-        .agg(
-            F.min_by("k", F.struct(F.col("d2"), F.col("k"))).alias("k"),
-            F.first("n_norm").alias("n_norm"),
-            F.first("cell").alias("cell"),
-        )
-    )
-    return best.select("n_id", "n_norm", "cell", "m", "k")
 
 
 def ivfadc_index(
@@ -1484,7 +1495,7 @@ def ivfadc_index(
     # lineage is a full assign + residual pass (TakeOrdered over the
     # resid relation) — its second consumer (the query LUT build in
     # ivfadc_scored_from_index) replayed that whole pass per query.
-    cb = ivfadc_codebook(resid, n_cells).cache()
+    cb = pq_codebook(resid, n_cells).cache()
     # cache the CODE INDEX: its consumers (packed-codes scan, query
     # LUTs via the shared lineage, collision-budget histogram, and —
     # in the upsert form — compaction) each replayed the full
@@ -1497,7 +1508,7 @@ def ivfadc_index(
     # DISK_ONLY instead of memory).  Measured min-of-3 at sf0.1:
     # ann_ivfadc_rerank 4.1-5.0 -> 2.9 s, family of 7 serving
     # queries 25.6-27.6 -> 21.2-22.4 s, results value-identical.
-    codes = ivfadc_codes(resid, cb).cache()
+    codes = pq_codes(resid, cb).cache()
     return en, cents, cb, codes
 
 
@@ -1533,11 +1544,11 @@ def ivfadc_index_trained_on(
     # codebook trains on BASE residuals only (the delta didn't exist
     # at training time); the code index encodes EVERY row.  Cached
     # like ivfadc_index's: the LUT consumer would replay its pass.
-    cb = ivfadc_codebook(resid.where(train_pred), n_cells).cache()
+    cb = pq_codebook(resid.where(train_pred), n_cells).cache()
     # cached for the same reason as ivfadc_index: the code index is
     # the stored serving artifact; every downstream consumer would
     # otherwise replay the encode expansion
-    codes = ivfadc_codes(resid, cb).cache()
+    codes = pq_codes(resid, cb).cache()
     return en, cents, cb, codes
 
 
@@ -1571,7 +1582,7 @@ def ivfadc_collision_budget(
     codes: DataFrame, cap: int, margin: int = 1
 ) -> DataFrame:
     """1-row (c_budget int) rerank budget derived from the PQ-code
-    collision histogram of an ivfadc_codes index (round-8 verdict
+    collision histogram of a pq_codes index (round-8 verdict
     #1): vectors sharing (cell, full 8-nibble code) are
     indistinguishable to ADC — within such a cluster the rerank cut
     keeps the TIE-BREAK's pick, not the true top-k, so the exact
@@ -1629,62 +1640,6 @@ def ivfadc_collision_budget(
     )
 
 
-def ivfadc_codes_packed(codes: DataFrame) -> DataFrame:
-    """One row per indexed vector: (n_id, n_norm, cell,
-    ks array<int>[PQ_M]) — the 8 nibble codes of an ivfadc_codes
-    relation packed into a single array ordered by subquantizer m.
-    This is the layout real IVFADC indexes store (codes are
-    CONTIGUOUS per vector) and the layout ADC scoring wants: one
-    candidate row per (query, vector) pair instead of PQ_M.  Cost:
-    one groupBy over the 8-rows/vector code relation — index-build
-    time, amortized across every query."""
-    return codes.groupBy("n_id").agg(
-        F.first("n_norm").alias("n_norm"),
-        F.first("cell").alias("cell"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "k"))),
-            lambda s: s.k,
-        ).alias("ks"),
-    )
-
-
-def ivfadc_query_luts(e: DataFrame, cb: DataFrame) -> DataFrame:
-    """Per-query ADC lookup table: (q_id, lut array<array<long>>)
-    where lut[m][k] = floor(<q_m, cw[m][k]> * SCALE + 0.5) — the
-    classic per-query M x K distance table of Jégou et al. (TPAMI
-    2011 §IV.A), built once per query against the broadcast
-    codebook (|q| * M * K rows, metadata scale) and itself
-    broadcast to the candidate scan.  Entries are the SAME
-    quantized bigints the row-expanded scorer produced, so adc
-    values are bit-identical."""
-    qsubs = e.where(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.posexplode(
-            F.array(*[_dsub("embedding", m) for m in range(PQ_M)])
-        ).alias("m", "qsv"),
-    )
-    per_mk = qsubs.join(F.broadcast(cb), "m").select(
-        "q_id",
-        "m",
-        "k",
-        F.floor(_ddot("qsv", "cw") * PQ_ADC_SCALE + F.lit(0.5))
-        .cast("long")
-        .alias("val"),
-    )
-    per_m = per_mk.groupBy("q_id", "m").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("k", "val"))),
-            lambda s: s.val,
-        ).alias("row")
-    )
-    return per_m.groupBy("q_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("m", "row"))),
-            lambda s: s.row,
-        ).alias("lut")
-    )
-
-
 def ivfadc_scored_from_index(
     e: DataFrame,
     cents: DataFrame,
@@ -1709,16 +1664,12 @@ def ivfadc_scored_from_index(
     oracle.
 
     Physical shape (round-10 rewrite of the measured round-9
-    bottleneck — coarse ADC was 220 of 296 s at 1M vectors): codes
-    pack to ONE row per vector (ivfadc_codes_packed) and each
-    query's M x K distance table builds once against the broadcast
-    codebook (ivfadc_query_luts), so scoring is a single
-    broadcast-joined projection over |q| x cell-size candidate rows
-    — 8 array lookups + one 8-term integer sum per candidate,
-    replacing the former 8-rows-per-pair expansion through two
-    joins and a corpus-scale groupBy shuffle.  The candidate scan
-    never shuffles: probes and LUTs ride broadcasts, packed codes
-    are scanned in place.
+    bottleneck — coarse ADC was 220 of 296 s at 1M vectors): the
+    shared PQ scorer — packed codes, broadcast per-query LUTs and
+    pq_lut_sum — so scoring is a single broadcast-joined projection
+    over |q| x cell-size candidate rows.  The candidate scan never
+    shuffles: probes and LUTs ride broadcasts, packed codes are
+    scanned in place.
 
     `labels` (optional (vec_id, label) relation) turns the inverted
     lists COMPOSITE: candidates join on (cell, label) instead of
@@ -1740,8 +1691,8 @@ def ivfadc_scored_from_index(
             .alias("qc"),
         )
     )
-    packed = ivfadc_codes_packed(codes)
-    luts = ivfadc_query_luts(e, cb)
+    packed = pq_codes_packed(codes)
+    luts = pq_query_luts(e, cb)
     cand_keys = ["cell"]
     out_cols = ["q_id", "n_id"]
     if labels is not None:
@@ -1753,15 +1704,6 @@ def ivfadc_scored_from_index(
         )
         cand_keys = ["cell", "label"]
         out_cols = ["q_id", "label", "n_id"]
-    # rsum = sum_m lut[m][ks[m]]: unrolled 8-term bigint sum — a
-    # fixed evaluation order over exact integers, identical to the
-    # former order-free groupBy sum of the same terms
-    rsum = None
-    for m in range(PQ_M):
-        term = F.element_at(
-            F.element_at("lut", m + 1), F.element_at("ks", m + 1) + 1
-        )
-        rsum = term if rsum is None else rsum + term
     # NOTE (measured non-optimization): folding the LUT into the
     # probes broadcast (one BHJ instead of two over the 125M-row
     # candidate stream) was A/B-tested at the 1M rung — wall times
@@ -1778,7 +1720,7 @@ def ivfadc_scored_from_index(
         .select(
             *out_cols,
             (
-                ((F.col("qc") + rsum) / F.lit(float(PQ_ADC_SCALE)))
+                ((F.col("qc") + pq_lut_sum()) / F.lit(float(PQ_ADC_SCALE)))
                 / F.nullif(F.col("q_norm") * F.col("n_norm"), F.lit(0.0))
             ).alias("adc"),
         )

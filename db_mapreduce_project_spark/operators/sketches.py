@@ -43,6 +43,7 @@ Scale shapes (100 TB):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -543,8 +544,10 @@ def quantile_probe_from_hist(
             )
         ).alias("n"),
     )
+    # from pandas, not a list of rows: a list becomes a Python RDD
+    # whose every scan runs Python tasks; pandas is a LocalRelation
     qs = hist.sparkSession.createDataFrame(
-        [(p,) for p in QH_PERMILLE], "permille int"
+        pd.DataFrame({"permille": QH_PERMILLE}), "permille int"
     )
     target = F.expr(f"(permille * n + 999) div 1000")
     probe = (

@@ -373,10 +373,13 @@ def wordfile_sink_roundtrip(spark, sf_dir: str):
         # The aggregated vocabulary is small by construction (same
         # bound as write_wordcount_text's coalesce(1)), so a driver
         # collect is safe here.
-        rows = (
-            spark.read.format("wordfile").load(out).orderBy("word").collect()
+        # read back into pandas, not a list of rows: a pandas frame
+        # becomes a LocalRelation, a list a Python RDD whose every
+        # scan runs Python tasks
+        vocab = (
+            spark.read.format("wordfile").load(out).orderBy("word").toPandas()
         )
-        return spark.createDataFrame(rows, schema="word string, cnt bigint")
+        return spark.createDataFrame(vocab, schema="word string, cnt bigint")
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

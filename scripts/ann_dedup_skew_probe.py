@@ -21,7 +21,9 @@ a real deployment ships:
 Writes $ANN_DEDUP_SKEW_OUT (default ANN_DEDUP_SKEW_r13.json).
 Floors pinned by tests/test_ann_recall.py::
 test_ann_dedup_skew_probe_artifact_floors.
-Usage: python scripts/ann_dedup_skew_probe.py
+Usage: python scripts/ann_dedup_skew_probe.py [hot_copies [cold_copies]]
+       (the skewed rung's size, as in scripts/ann_skew_probe.py;
+       default 150000 25)
 """
 
 from __future__ import annotations
@@ -59,7 +61,12 @@ from db_mapreduce_project_spark.functions.vectors import l2
 from db_mapreduce_project_spark.session import get_spark
 from scripts.ann_recall import top_map
 from scripts.ann_recall_scale import exact_truth_numpy
-from scripts.ann_skew_probe import build_skewed
+from scripts.ann_skew_probe import (
+    COLD_NOISE,
+    HOT_NOISE,
+    build_skewed,
+    rung_args,
+)
 
 PROBE = 8  # cells probed per query — the r12 skew-probe setting
 HOT_ID_FLOOR = 1_000_000_000  # build_skewed: hot vec_ids >= 1e9
@@ -178,19 +185,22 @@ def exact_route_leg(spark, rel, tag: str) -> dict:
 
 
 def main() -> None:
+    hot_copies, cold_copies = rung_args(sys.argv[1:])
     spark = get_spark("ann-dedup-skew-probe")
     spark.sparkContext.setLogLevel("ERROR")
     base = load_table(spark, "/root/testdata/sf0.1", "embeddings").select(
         "vec_id", "embedding"
     )
     scratch = tempfile.mkdtemp(prefix="ann_dedup_skew_")
-    build_skewed(base).repartition(32).write.mode("overwrite").parquet(
+    skewed = build_skewed(base, hot_copies, cold_copies)
+    skewed.repartition(32).write.mode("overwrite").parquet(
         os.path.join(scratch, "raw.parquet")
     )
     raw = spark.read.parquet(os.path.join(scratch, "raw.parquet"))
     out = {
-        "rung": "ANN_SKEW_r12 geometry: hot 150k @ noise 0.2 around "
-        "one direction + cold 25x1999 @ 0.02",
+        "rung": f"ANN_SKEW_r12 geometry: hot {hot_copies} @ noise "
+        f"{HOT_NOISE} around one direction + cold {cold_copies}x1999 "
+        f"@ {COLD_NOISE}",
         "probe": PROBE,
         "margin": RERANK_MARGIN,
         "topk": TOPK,

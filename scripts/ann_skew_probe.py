@@ -26,7 +26,9 @@ train_ivf_centroids, at derive_n_cells(n) cells:
   * recall/worst vs exact float64 ground truth, and wall.
 
 Writes $ANN_SKEW_OUT (default ANN_SKEW_r12.json).
-Usage: python scripts/ann_skew_probe.py
+Usage: python scripts/ann_skew_probe.py [hot_copies [cold_copies]]
+       (default: 150000 25, the ~200k-vector rung above; e.g.
+       `2000 2` builds a ~6k-vector smoke rung)
 """
 
 from __future__ import annotations
@@ -67,9 +69,17 @@ HOT_NOISE = 0.2
 COLD_NOISE = 0.02
 
 
-def build_skewed(base):
-    """Deterministic skewed rung: HOT_COPIES perturbations of
-    vec_id 0's embedding + COLD_COPIES perturbed copies of every
+def rung_args(argv: list[str]) -> tuple[int, int]:
+    """(hot_copies, cold_copies) from `[hot_copies [cold_copies]]`
+    command-line arguments; the defaults are the certified rung."""
+    hot = int(argv[0]) if argv else HOT_COPIES
+    cold = int(argv[1]) if len(argv) > 1 else COLD_COPIES
+    return hot, cold
+
+
+def build_skewed(base, hot_copies: int, cold_copies: int):
+    """Deterministic skewed rung: `hot_copies` perturbations of
+    vec_id 0's embedding + `cold_copies` perturbed copies of every
     other identity.  Ids follow the ladder convention (vec_id*2 +
     copy*1e8 + parity) so query thinning works unchanged."""
     hot_src = base.where(F.col("vec_id") == 0)
@@ -80,7 +90,7 @@ def build_skewed(base):
                 "embedding"
             ),
             F.explode(
-                F.sequence(F.lit(0), F.lit(HOT_COPIES - 1))
+                F.sequence(F.lit(0), F.lit(hot_copies - 1))
             ).alias("copy"),
         )
         .withColumn(
@@ -112,7 +122,7 @@ def build_skewed(base):
                 "embedding"
             ),
             F.explode(
-                F.sequence(F.lit(0), F.lit(COLD_COPIES - 1))
+                F.sequence(F.lit(0), F.lit(cold_copies - 1))
             ).alias("copy"),
         )
         .withColumn(
@@ -144,13 +154,15 @@ def build_skewed(base):
 
 
 def main() -> None:
+    hot_copies, cold_copies = rung_args(sys.argv[1:])
     spark = get_spark("ann-skew-probe")
     spark.sparkContext.setLogLevel("ERROR")
     base = load_table(spark, "/root/testdata/sf0.1", "embeddings").select(
         "vec_id", "embedding"
     )
     scratch = tempfile.mkdtemp(prefix="ann_skew_")
-    build_skewed(base).repartition(32).write.mode("overwrite").parquet(
+    skewed = build_skewed(base, hot_copies, cold_copies)
+    skewed.repartition(32).write.mode("overwrite").parquet(
         os.path.join(scratch, "e.parquet")
     )
     rung = spark.read.parquet(os.path.join(scratch, "e.parquet"))
@@ -174,8 +186,8 @@ def main() -> None:
 
     en = rung.select("vec_id", "embedding", l2("embedding").alias("norm"))
     out = {
-        "rung": f"hot {HOT_COPIES} @ noise {HOT_NOISE} around one "
-        f"direction + cold {COLD_COPIES}x1999 @ {COLD_NOISE} "
+        "rung": f"hot {hot_copies} @ noise {HOT_NOISE} around one "
+        f"direction + cold {cold_copies}x1999 @ {COLD_NOISE} "
         f"({n} vectors)",
         "cells": cells,
         "probe": probe,

@@ -23,6 +23,9 @@ Two fixtures, two stories:
   (LSH-family 0.82, IVF 1.0).
 """
 
+import pytest
+from pyspark.sql import functions as F
+
 from db_mapreduce_project_spark.io import load_table
 from db_mapreduce_project_spark.operators.retrieval import (
     ivfadc_rerank_from,
@@ -36,14 +39,13 @@ from db_mapreduce_project_spark.operators.similarity import (
     brute_topk_from,
     ivf_centroids,
     ivf_topk_from,
-    ivfadc_codebook,
-    ivfadc_codes,
     ivfadc_residuals,
     ivfadc_topk_from,
     l2,
     lsh_multitable_topk_from,
     lsh_topk_from,
     pq_adc_from,
+    pq_codebook,
     pq_codes,
     sq8_adc_from,
 )
@@ -117,20 +119,6 @@ def test_ann_recall_floors_clustered(spark):
     assert got["mrl"]["recall"] >= 0.95, got
 
 
-def test_pq_index_shape(spark):
-    """The PQ index is exactly PQ_M codes per vector, every code a
-    valid codeword id — the 8-nibble-per-vector memory contract."""
-    e = _embeddings(spark)
-    n = e.count()
-    codes = pq_codes(e).collect()
-    assert len(codes) == n * PQ_M
-    per_vec = {}
-    for r in codes:
-        assert 0 <= r["k"] < PQ_K
-        per_vec.setdefault(r["n_id"], set()).add(r["m"])
-    assert all(ms == set(range(PQ_M)) for ms in per_vec.values())
-
-
 def test_multitable_dominates_single_table(spark):
     """Table 0 of the multi-table index IS the single-table index
     (same seeded plane stream), so the multitable candidate set is a
@@ -189,25 +177,34 @@ def test_ivfadc_rerank_dominates_adc_per_query(spark):
         ), q
 
 
-def test_ivfadc_index_shape(spark):
-    """The serving index is exactly PQ_M nibble codes per vector
-    (every k a valid codeword id), and the residual codebook is
-    trained PAST the centroid rows — no codeword is the zero vector
-    (training on the centroids' own residuals would collapse the
-    codebook to the origin and the ADC term to a constant)."""
+@pytest.mark.parametrize("skip", [0, N_CELLS], ids=["raw", "residual"])
+def test_ivfadc_index_shape(spark, skip):
+    """The shared PQ encoder emits exactly PQ_M nibble codes per
+    vector (every k a valid codeword id), over the raw vectors (the
+    ann_pq_adc index, skip 0) and over the IVF residuals (the
+    IVFADC index).  The residual codebook is trained PAST the
+    centroid rows — no codeword is the zero vector (training on the
+    centroids' own residuals would collapse the codebook to the
+    origin and the ADC term to a constant)."""
     e = (
         _embeddings(spark)
         .select("vec_id", "embedding", l2("embedding").alias("norm"))
         .cache()
     )
     n = e.count()
-    cents = ivf_centroids(e)
-    resid = ivfadc_residuals(e, cents)
-    cb = ivfadc_codebook(resid, N_CELLS).collect()
-    assert len(cb) == PQ_M * PQ_K
-    assert all(any(abs(v) > 0 for v in r["cw"]) for r in cb)
-    codes = ivfadc_codes(resid, ivfadc_codebook(resid, N_CELLS))
-    rows = codes.collect()
+    if skip:
+        vecs = ivfadc_residuals(e, ivf_centroids(e))
+    else:
+        vecs = e.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        )
+    cb = pq_codebook(vecs, skip)
+    book = cb.collect()
+    assert len(book) == PQ_M * PQ_K
+    if skip:
+        assert all(any(abs(v) > 0 for v in r["cw"]) for r in book)
+    rows = pq_codes(vecs, cb).collect()
     e.unpersist()
     assert len(rows) == n * PQ_M
     per_vec = {}
@@ -238,7 +235,6 @@ def test_ivf_recall_monotone_in_probe_count(spark):
 # ---------------------------------------------------------------
 
 from pyspark.sql import Window
-from pyspark.sql import functions as F
 
 from db_mapreduce_project_spark.operators.similarity import (
     N_PROBE,
@@ -1327,8 +1323,6 @@ def test_train_ivf_centroids_degenerate_corpus_raises(spark):
     vector is zero-norm) used to crash k-means++ seeding with an
     opaque numpy ``rng.integers(0)`` ValueError; the guard now
     raises a descriptive error before seeding."""
-    import pytest
-
     from db_mapreduce_project_spark.operators.similarity import (
         train_ivf_centroids,
     )

@@ -5,6 +5,8 @@ stay inside WholeStageCodegen."""
 
 import re
 
+import pytest
+
 from db_mapreduce_project_spark import registry
 from db_mapreduce_project_spark.plans.inspect import (
     count_exchanges,
@@ -114,6 +116,40 @@ def test_ivf_centroid_assignment_is_broadcast_nlj(spark):
     plan = physical_plan(df)
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def _key_sets(plan: str, label: str) -> set[tuple[str, ...]]:
+    """The key lists after `label` ("Keys" for aggregates, "Left
+    keys"/"Right keys" for joins) in a formatted plan, each as a
+    sorted tuple of column names without expression ids."""
+    return {
+        tuple(sorted(re.sub(r"#\d+L?$", "", c.strip()) for c in ks.split(",")))
+        for ks in re.findall(rf"^\s*{label} \[\d+\]: \[(.*)\]$", plan, re.M)
+    }
+
+
+def test_pq_adc_scores_by_lut_lookup(spark):
+    """ann_pq_adc scores each (query, candidate) pair as a sum of
+    PQ_M lookups in the query's broadcast LUT over packed codes:
+    no join to the codebook on (m, k), and no per-pair
+    re-aggregation keyed on (q_id, n_id)."""
+    plan = physical_plan(registry.QUERIES["ann_pq_adc"](spark, SF))
+    assert ("n_id", "q_id") not in _key_sets(plan, "Keys")
+    joins = _key_sets(plan, "Left keys") | _key_sets(plan, "Right keys")
+    assert ("k", "m") not in joins
+    assert ("q_id",) in joins  # the broadcast-LUT join
+
+
+@pytest.mark.parametrize(
+    "name", ["sketch_quantile_hist", "wordfile_sink_roundtrip"]
+)
+def test_small_driver_tables_are_local_relations(spark, name):
+    """Small tables built on the driver come from pandas frames (a
+    LocalRelation), not lists of rows: a list becomes a Python RDD,
+    and every scan of it runs Python tasks."""
+    plan = physical_plan(registry.QUERIES[name](spark, SF))
+    assert "Scan ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
 
 
 def test_wordcount_reads_only_text_column(spark):
