@@ -73,10 +73,6 @@ def _ngrams(text_col: str, n: int):
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
 
 
-def _bigrams(text_col: str):
-    return _ngrams(text_col, 2)
-
-
 def doc_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language summary of the duplicate-bigram fraction.
 
@@ -86,95 +82,23 @@ def doc_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc count, integer-average dup_bp, max, and how many docs
     exceed the Gopher-style flag threshold.
 
-    The repetition score is a PER-DOCUMENT property, so it never
-    leaves the row: size(grams) vs size(array_distinct(grams)) are
-    map-side array ops — the exploded corpus is never shuffled.
-    The only exchange feeds the 5-row language rollup.
-
-    The grams array is materialized ONCE per row through a
-    single-element explode: without that Generate barrier,
-    CollapseProject inlines the (expensive) array-construction
-    expression into every downstream reference — size, distinct,
-    and the filter would each rebuild it (measured 2.3x slower).
-
-    Bigrams are STRUCT PAIRS (two shifted slices zipped), not
-    joined strings: arrays_zip copies each slice once instead of
-    running slice+concat_ws per element, and pair-distinct equals
-    string-distinct because \\s+-split words contain no spaces
-    (measured another 2.1x on top of the explode barrier).  The
-    oracle keeps the joined-string formulation — same counts by
-    that bijection.
-    """
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+", -1)
-    n = F.size(toks)
-    grams = F.when(
-        n >= 2,
-        F.filter(
-            F.arrays_zip(
-                F.slice(toks, 1, n - 1).alias("a"),
-                F.slice(toks, 2, n - 1).alias("b"),
-            ),
-            lambda p: ~((p["a"] == "") & (p["b"] == "")),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    per_doc = (
-        d.select("lang", F.explode(F.array(grams)).alias("gs"))
-        .select(
-            "lang",
-            F.size("gs").alias("total"),
-            F.size(F.array_distinct("gs")).alias("n_distinct"),
-        )
-        .where(F.col("total") > 0)
-    )
-    dup_bp = ((F.col("total") - F.col("n_distinct")) * 10000).cast(
-        "bigint"
-    ) / F.col("total")
-    per_doc = per_doc.select(
-        "lang", F.floor(dup_bp).cast("bigint").alias("dup_bp")
-    )
-    return _repetition_rollup(per_doc)
-
-
-def _repetition_rollup(per_doc: DataFrame) -> DataFrame:
-    """Language rollup over per-doc (lang, dup_bp) rows — shared by
-    the Catalyst and Arrow repetition kernels so both certify
-    against the same oracle."""
-    return (
-        per_doc.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            (F.sum("dup_bp") / F.count("*")).alias("avg_dup_bp"),
-            F.max("dup_bp").alias("max_dup_bp"),
-            F.sum(
-                F.when(F.col("dup_bp") > REPETITION_FLAG_BP, 1).otherwise(0)
-            ).alias("n_flagged"),
-        )
-        .orderBy("lang")
-    )
-
-
-def doc_ngram_repetition_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-kernel twin of doc_ngram_repetition: the per-document
-    dup-bigram score runs as a mapInPandas batch kernel (hash-set
-    distinct per doc in Python) instead of Catalyst HOF expression
-    eval (arrays_zip + array_distinct per row).
-
-    Same oracle, same rollup — this is the designed escalation path
-    when a per-row kernel's interpreted-expression constant
-    dominates: the score is still computed map-side with ZERO
-    corpus shuffle (the kernel emits one (lang, dup_bp) row per doc
-    and only the 5-row language rollup exchanges), and the Python
-    boundary is Arrow-batched, never row-at-a-time.  Kept alongside
-    the Catalyst version deliberately: at 100 TB you pick whichever
-    constant wins on your hardware; differential identity between
-    the two is itself a correctness check (both registered against
-    the identical DuckDB SQL).
+    The per-document score runs as a mapInPandas batch kernel
+    (hash-set distinct per doc in Python): it is a PER-DOCUMENT
+    property, so it never leaves the row — the kernel emits one
+    (lang, dup_bp) row per doc, the corpus is never shuffled, and
+    only the 5-row language rollup exchanges.  The Python boundary
+    is Arrow-batched, never row-at-a-time.  (A Catalyst form over
+    arrays_zip + array_distinct took 1.52 s against this kernel's
+    0.65 s at sf0.1, `local[4]`, and tied it at sf0.01.)  Both
+    registered names, doc_ngram_repetition and
+    doc_ngram_repetition_arrow, run this function.
 
     Tokenization contract replicated exactly: trim = ASCII-space
     strip (Spark/DuckDB `trim` removes 0x20 only), split on Java
     `\\s`-class runs, bigram pairs dropped only when BOTH halves are
-    empty, integer basis-point floor division."""
+    empty, integer basis-point floor division.  The oracle joins
+    each pair into one string — same counts, because `\\s+`-split
+    words contain no spaces."""
     import re
 
     import pandas as pd
@@ -204,8 +128,19 @@ def doc_ngram_repetition_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bps.append((total - len(set(pairs))) * 10000 // total)
             yield pd.DataFrame({"lang": langs, "dup_bp": bps})
 
-    per_doc = d.mapInPandas(score, "lang string, dup_bp bigint")
-    return _repetition_rollup(per_doc)
+    return (
+        d.mapInPandas(score, "lang string, dup_bp bigint")
+        .groupBy("lang")
+        .agg(
+            F.count("*").alias("n_docs"),
+            (F.sum("dup_bp") / F.count("*")).alias("avg_dup_bp"),
+            F.max("dup_bp").alias("max_dup_bp"),
+            F.sum(
+                F.when(F.col("dup_bp") > REPETITION_FLAG_BP, 1).otherwise(0)
+            ).alias("n_flagged"),
+        )
+        .orderBy("lang")
+    )
 
 
 DOC_NGRAM_REPETITION_ORACLE = f"""
@@ -860,7 +795,7 @@ ORDER BY split, lang
 register("doc_ngram_repetition", doc_ngram_repetition, DOC_NGRAM_REPETITION_ORACLE)
 register(
     "doc_ngram_repetition_arrow",
-    doc_ngram_repetition_arrow,
+    doc_ngram_repetition,
     DOC_NGRAM_REPETITION_ORACLE,
 )
 register(

@@ -19,6 +19,7 @@ availableNow and assert final state == batch.
 
 from __future__ import annotations
 
+import os
 from typing import Any, Iterable, Iterator
 
 import numpy as np
@@ -29,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.stable import duck_qsum, qsum
 from ..io import load_table
 from ..registry import register
+from .jobs import _run_sink, _stream_events
 
 QSCALE = 4  # quantize value at 1e-4 — matches stable.qsum(value, 4)
 
@@ -65,8 +67,6 @@ def stream_user_totals(
     """Streaming runner: stateful per-user totals, update mode,
     availableNow replay, memory sink.  Returns the StreamingQuery."""
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .jobs import _stream_events
 
     ev = _stream_events(spark, sf_dir).select("user_id", "value")
     out = ev.groupBy("user_id").applyInPandasWithState(
@@ -271,8 +271,6 @@ def _sessionized(spark: SparkSession, sf_dir: str, source_dir: str | None = None
     sink runner, the parquet-sink runner, and the crash tests)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from .jobs import _stream_events
-
     ev = (
         _stream_events(spark, sf_dir, source_dir)
         .select("user_id", "ts", "value")
@@ -315,11 +313,9 @@ def session_sink_emitter(out_dir: str):
     watermark) and rewrites its own files instead of duplicating
     them.  Module-level factory so tests can wrap it with injected
     crashes."""
-    import os as _os
-
     def emit_batch(batch_df, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, f"b{batch_id}")
+            os.path.join(out_dir, f"b{batch_id}")
         )
 
     return emit_batch
@@ -365,28 +361,14 @@ def stream_sink_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed) at stream end stay in state by design; the oracle
     applies the same final-watermark filter (max event time,
     ms-truncated as Spark tracks it, minus the 10-minute delay)."""
-    import shutil
-    import tempfile
-
-    import os
-
-    root = tempfile.mkdtemp(prefix="stream_sessions_q_")
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    q = stream_sessions_to_sink(spark, sf_dir, out, ckpt)
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(root, ignore_errors=True)
-        raise TimeoutError(
-            "stream_sink_sessions: stream did not terminate within 300 s"
-        )
-    result = (
-        read_session_sink(spark, out)
-        .orderBy("user_id", "session_start")
-        .localCheckpoint(eager=True)
+    return _run_sink(
+        spark,
+        "stream_sink_sessions",
+        lambda out, ckpt: stream_sessions_to_sink(spark, sf_dir, out, ckpt),
+        lambda out: read_session_sink(spark, out).orderBy(
+            "user_id", "session_start"
+        ),
     )
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 # Microsecond-exact gap sessionization (matching the stateful

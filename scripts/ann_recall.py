@@ -29,11 +29,13 @@ summed over queries (exact sets include ties broken identically on
 both sides: cos DESC, n_id ASC).  Per-query minimum is also
 recorded — a pooled number can hide a single dead query.
 
-Writes ANN_RECALL_r7.json; tests/test_dedup_similarity.py floors
-are set from these measurements (measured minus a few points), NOT
-from hope.
+Writes the measurements to OUT.json, a required argument.  The
+floors in tests/test_dedup_similarity.py and tests/test_ann_recall.py
+were set from the committed ANN_RECALL_r7.json (measured minus a few
+points), NOT from hope; pass a new path so a rerun cannot overwrite
+that artifact.
 
-Usage: python scripts/ann_recall.py [out.json]
+Usage: python scripts/ann_recall.py OUT.json
 """
 
 from __future__ import annotations
@@ -182,7 +184,9 @@ def _filtered_truth(el):
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "ANN_RECALL_r7.json"
+    if len(sys.argv) != 2:
+        sys.exit("usage: python scripts/ann_recall.py OUT.json")
+    out_path = sys.argv[1]
     spark = get_spark("ann-recall")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -17,7 +17,7 @@ annotated instead of analyzed:
     k-means, PageRank, ...); per-round plans are asserted in
     tests/test_plans.py;
   * streaming — the stream_sink_* queries RUN a micro-batch
-    pipeline at construction and return the materialized sink;
+    pipeline at construction and return a lazy read-back of the sink;
     their plan story is per-batch state metrics, recorded in
     STRESS_LADDER_r9.json and pinned by
     tests/test_streaming_state_bounds.py.

@@ -323,6 +323,8 @@ _UNKEYED_JOIN_OK = {
     "text_hybrid_rrf_topk",     # 1-row query-vector + 1-row BM25 stats
     "curate_dsir_weights",      # 1-row corpus-totals scalar broadcast
     "sketch_quantile_hist",     # 3-row permille x <=256-row bin probes
+    # the same quantile_probe_from_hist over the sink's merged bins
+    "stream_sink_quantile_hist",
     "ann_ivfadc_topk",          # broadcast NLJ against N_CELLS centroids
     "ann_ivfadc_rerank",        # same centroid/codebook broadcasts
     "ann_ivfadc_incremental_delta",  # same + 1-row budget broadcast

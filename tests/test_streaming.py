@@ -10,6 +10,8 @@ from db_mapreduce_project_spark.streaming.jobs import (
     stream_tumbling_counts,
 )
 
+registry.load_all_queries()
+
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
@@ -1332,3 +1334,26 @@ def test_tws_timer_sessionizer_slice_invariant(spark, sf_dir):
         )
     )
     assert got == set() and not handle.timers.get((999_999,))
+
+
+# ---------------------------------------------------------------
+# the registered sink queries pin nothing in the block manager
+# ---------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in registry.QUERIES if n.startswith("stream_sink_"))
+)
+def test_sink_query_leaves_no_persistent_rdd(spark, sf_dir, name):
+    """A sink query returns a lazy read-back of what its stream
+    wrote: once the consumer has materialized it, clearCache()
+    leaves the persistent-RDD count where it was before the query
+    was built.  `df` stays referenced to the end, so garbage
+    collection cannot release a pinned RDD and hide it."""
+    jsc = spark.sparkContext._jsc
+    spark.catalog.clearCache()
+    baseline = jsc.getPersistentRDDs().size()
+    df = registry.QUERIES[name](spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
+    assert jsc.getPersistentRDDs().size() == baseline
