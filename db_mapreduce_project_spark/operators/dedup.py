@@ -69,15 +69,14 @@ def _capped_shingle_hashes(d: DataFrame) -> DataFrame:
     # cache BEFORE the DF-cap branch: the per-char polynomial fold is
     # the expensive part, and without the cache it runs twice (once
     # under the hot-shingle aggregate, once as the anti-join left
-    # side) — the broadcast anti-join downstream is map-side cheap
-    # round 14: the shingle producer is the vectorized Arrow kernel
-    # (guide §4.2/§4.3) — value-identical hash pairs to the Catalyst
-    # token_shingle_hash_pairs fold (differentially tested), computed
-    # as NumPy modular arithmetic over flat codepoint buffers instead
-    # of per-char HOF lambdas (the engine's dominant per-task CPU:
-    # 176 JVM-CPU-s on one minhash query in the r13 bench).  The
-    # kernel dedups per doc, so the old `.distinct()` exchange is
-    # gone too: one Arrow boundary replaces the fold chain + shuffle.
+    # side) — the broadcast anti-join downstream is map-side cheap.
+    # The shingle producer is the vectorized Arrow kernel: value-
+    # identical hash pairs to the Catalyst token_shingle_hash_pairs
+    # fold (differentially tested), computed as NumPy modular
+    # arithmetic over flat codepoint buffers instead of per-char HOF
+    # lambdas (the per-char fold was the engine's dominant per-task
+    # CPU: 176 JVM-CPU-s on one minhash query).  The kernel dedups
+    # per doc, so no `.distinct()` exchange is needed.
     sh_all = token_shingle_hash_pairs_arrow(d, "doc_id", "text", n=3).cache()
     hot = (
         sh_all.groupBy("h1", "h2")
@@ -112,6 +111,172 @@ shingles AS (
     USING (shingle)
 )"""
 
+
+# ---- the near-duplicate pair core ------------------------------------
+# Every pair builder below is a composition of these: a candidate
+# source (the all-pairs overlap, a band index, or probes over
+# `_ranked`), the one array-set verify for candidates, and a Jaccard
+# or containment finisher.  All of them speak (a, b, n_common, n_a,
+# n_b) rows.
+
+
+def _all_pairs_overlap(d: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, n_a, n_b) for every doc_a < doc_b
+    pair of a (doc_id, text) relation that shares a capped shingle:
+    the exact inverted-index self-join.  It shuffles fixed-width hash
+    pairs, not shingle strings: the same join (pair collisions are
+    ~n^2/2^60, negligible) at a fraction of the shuffle bytes, and
+    the strings are never built (token-composed hashes).
+
+    Shingle-set SIZES ride ON the shingle rows (one window count
+    partitioned by doc_id) instead of being re-joined onto the pairs
+    afterwards: a doc-cardinality sizes table joined onto the pair
+    set twice is two big-big shuffles at 100 TB (the pair set is the
+    largest frame in the pipeline).  Carrying one bigint per shingle
+    row costs a single extra shuffle of the inverted index and makes
+    the sizes free at pair-aggregation time via first() — measured
+    2.4x faster at sf0.1, value-identical."""
+    sh = (
+        _capped_shingle_hashes(d)
+        .withColumn(
+            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
+        )
+        .cache()
+    )
+    a = sh.select(
+        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "h1", "h2"
+    )
+    b = sh.select(
+        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "h1", "h2"
+    )
+    return (
+        a.join(b, ["h1", "h2"])
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).alias("n_common"),
+            # every row of a (doc_a, doc_b) group carries the same
+            # sizes, so first() is deterministic
+            F.first("n_a").alias("n_a"),
+            F.first("n_b").alias("n_b"),
+        )
+    )
+
+
+def _band_index(sh: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(doc_id, band, band_hash) MinHash band index of a (doc_id, h1,
+    h2) shingle relation: a bands*rows-hash portable signature folded
+    into `bands` fixed-width keys per doc.  Returned cached: every
+    candidate join reads it on both sides, and without the cache
+    each side re-runs the signature aggregation (the index is
+    `bands` rows per doc — tiny)."""
+    num_hashes = bands * rows
+    sig = minhash_signature_from_pairs(sh, "doc_id", num_hashes=num_hashes)
+    return lsh_bands_portable(
+        sig, "doc_id", num_hashes=num_hashes, bands=bands
+    ).cache()
+
+
+def _ranked(sh: DataFrame) -> DataFrame:
+    """A (doc_id, h1, h2) shingle relation plus each doc's set size
+    `n_sh` and each shingle's 1-based rank `rk` in the global (h1,
+    h2) order: the frame prefix probes select from."""
+    by_doc = Window.partitionBy("doc_id")
+    return sh.withColumn("n_sh", F.count(F.lit(1)).over(by_doc)).withColumn(
+        "rk", F.row_number().over(by_doc.orderBy("h1", "h2"))
+    )
+
+
+def _in_prefix(t: float) -> Column:
+    """Whether a `_ranked` row lies in its doc's containment-`t`
+    prefix, the first n_sh - ceil(t*n_sh) + 1 shingles.  By the
+    prefix lemma (Chaudhuri, Ganti & Kaushik, ICDE 2006) a pair with
+    |A n B| >= ceil(t*|A|) shares a shingle inside A's prefix, so
+    prefix probes lose no qualifying pair."""
+    return F.col("rk") <= F.col("n_sh") - F.ceil(F.lit(t) * F.col("n_sh")) + 1
+
+
+def _verify_overlap(
+    cand: DataFrame, sh: DataFrame, a: str, b: str
+) -> DataFrame:
+    """(a, b, n_common, n_a, n_b) for the candidate pairs (a, b) of
+    `cand`: the exact overlap of the two docs' shingle sets in `sh`.
+
+    Each doc's set is MATERIALIZED as one array<bigint> row (the two
+    portable hashes packed collision-free into one bigint: h1*2^30 +
+    h2, both < 2^30) and |A n B| is a JVM-side array_intersect.  Cost
+    is candidate-bounded — only pairs a scheme proposed are scored —
+    and PAIR-SHAPED: one row per candidate carrying two set arrays.
+    A row-per-shingle re-join instead explodes to |cand| x avg-set-
+    size rows (154 M rows for 609k candidates on the sf0.1 fixture;
+    the array form verifies the same candidates 3x faster cold, 10x
+    warm).  Array payload per row is bounded by document size, the
+    same bound the shingle table itself carries."""
+    docarr = sh.select(
+        "doc_id", (F.col("h1") * F.lit(1 << 30) + F.col("h2")).alias("h")
+    ).groupBy("doc_id").agg(
+        F.collect_list("h").alias("hs"), F.count("*").alias("n_sh")
+    )
+
+    def side(name: str, suffix: str) -> DataFrame:
+        return docarr.select(
+            F.col("doc_id").alias(name),
+            F.col("hs").alias(f"hs_{suffix}"),
+            F.col("n_sh").alias(f"n_{suffix}"),
+        )
+
+    return cand.join(side(a, "a"), a).join(side(b, "b"), b).select(
+        a,
+        b,
+        # explode(array(.)) is a collapse barrier: without it the
+        # finisher's threshold is pushed into the join condition and
+        # the intersection runs twice for every pair that passes
+        F.explode(
+            F.array(F.size(F.array_intersect("hs_a", "hs_b")).cast("long"))
+        ).alias("n_common"),
+        "n_a",
+        "n_b",
+    )
+
+
+def _jaccard(pairs: DataFrame) -> DataFrame:
+    """Overlap pairs with `jaccard` = |A n B| / |A u B| >=
+    JACCARD_THRESHOLD, where |A u B| = |A| + |B| - |A n B|: a ratio
+    of exact integers, so no float-order hazard."""
+    return pairs.withColumn(
+        "jaccard",
+        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+    ).where(F.col("jaccard") >= JACCARD_THRESHOLD)
+
+
+def _containment(pairs: DataFrame) -> DataFrame:
+    """Overlap pairs with `containment` = |A n B| / min(|A|, |B|) >=
+    CONTAIN_THRESHOLD, a ratio of exact integers."""
+    return pairs.withColumn(
+        "containment", F.col("n_common") / F.least("n_a", "n_b")
+    ).where(F.col("containment") >= CONTAIN_THRESHOLD)
+
+
+def _oriented_containment(pairs: DataFrame) -> DataFrame:
+    """(contained_id, container_id, n_common, containment) of
+    (doc_a < doc_b) overlap pairs at the containment threshold,
+    ordered.  The CONTAINED side is the smaller set, doc_a on ties
+    (deterministic because the pairs are canonical)."""
+    small_is_a = F.col("n_a") <= F.col("n_b")
+    return (
+        _containment(pairs)
+        .select(
+            F.when(small_is_a, F.col("doc_a"))
+            .otherwise(F.col("doc_b"))
+            .alias("contained_id"),
+            F.when(small_is_a, F.col("doc_b"))
+            .otherwise(F.col("doc_a"))
+            .alias("container_id"),
+            "n_common",
+            "containment",
+        )
+        .orderBy("contained_id", "container_id")
+    )
 
 
 def _set_fingerprint(df: DataFrame, c1: str, c2: str) -> tuple:
@@ -160,58 +325,12 @@ def jaccard_pairs_from(d: DataFrame) -> DataFrame:
     """Near-dup pairs by word-3-gram Jaccard similarity >= 0.05
     over a (doc_id, text) relation.
 
-    Inverted-index join: explode distinct shingles, drop hot
-    (DF > cap) shingles, self-join on shingle (only co-occurring
-    docs meet), count intersection, then |A u B| = |A| + |B| -
-    |A n B|.  Jaccard is a ratio of exact integers — no float-order
-    hazard."""
-    # shuffle fixed-width hash pairs, not shingle strings: same join
-    # semantics (pair collisions are ~n^2/2^60, negligible), a
-    # fraction of the shuffle bytes — the difference between
-    # shipping the corpus and shipping fixed-width keys at 100 TB —
-    # and the strings are never even built (token-composed hashes).
-    #
-    # Shingle-set SIZES ride ON the shingle rows (one window count
-    # partitioned by doc_id) instead of being re-joined onto the
-    # candidate pairs afterwards: the old shape joined a
-    # doc-cardinality sizes table onto the pair set TWICE — two
-    # big-big shuffles at 100 TB (the pair set is the largest frame
-    # in the pipeline).  Carrying one bigint per shingle row costs a
-    # single extra shuffle of the (already shuffled-size) inverted
-    # index and makes the sizes free at pair-aggregation time via
-    # first() — measured 2.4x faster at sf0.1, value-identical.
-    from pyspark.sql.window import Window
-
-    sh = (
-        _capped_shingle_hashes(d)
-        .withColumn(
-            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
-        .cache()
-    )
-    a = sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "h1", "h2"
-    )
-    b = sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "h1", "h2"
-    )
+    Inverted-index join (:func:`_all_pairs_overlap`): distinct
+    shingles with hot (DF > cap) ones dropped, self-joined on the
+    shingle so only co-occurring docs meet, then the exact Jaccard
+    finisher."""
     return (
-        a.join(b, ["h1", "h2"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            # every row of a (doc_a, doc_b) group carries the same
-            # sizes, so first() is deterministic
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+        _jaccard(_all_pairs_overlap(d))
         .select("doc_a", "doc_b", "n_common", "jaccard")
         .orderBy("doc_a", "doc_b")
     )
@@ -259,46 +378,7 @@ def containment_pairs_from(d: DataFrame) -> DataFrame:
     containment = |A n B| / min(|A|, |B|) is a ratio of exact
     integers.  The CONTAINED side is the smaller set (doc_a on
     ties — deterministic because pairs are doc_a < doc_b)."""
-    from pyspark.sql.window import Window
-
-    sh = (
-        _capped_shingle_hashes(d)
-        .withColumn(
-            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
-        .cache()
-    )
-    a = sh.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "h1", "h2"
-    )
-    b = sh.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "h1", "h2"
-    )
-    pairs = (
-        a.join(b, ["h1", "h2"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.first("n_a").alias("n_a"),
-            F.first("n_b").alias("n_b"),
-        )
-    )
-    small_is_a = F.col("n_a") <= F.col("n_b")
-    return (
-        pairs.select(
-            F.when(small_is_a, F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_id"),
-            F.when(small_is_a, F.col("doc_b"))
-            .otherwise(F.col("doc_a"))
-            .alias("container_id"),
-            "n_common",
-            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
-        )
-        .where(F.col("containment") >= CONTAIN_THRESHOLD)
-        .orderBy("contained_id", "container_id")
-    )
+    return _oriented_containment(_all_pairs_overlap(d))
 
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,15 +498,8 @@ def minhash_pairs_from(
     surfaced.  At scale this replaces the full inverted-index join
     with an equi-join on `bands` fixed-width band keys per doc.
     """
-    num_hashes = bands * rows
     sh = _capped_shingle_hashes(d).cache()
-    sig = minhash_signature_from_pairs(sh, "doc_id", num_hashes=num_hashes)
-    # cache the band index: the candidate self-join consumes it on
-    # BOTH sides, and without the cache each side re-runs the whole
-    # signature aggregation (the index is `bands` rows/doc — tiny)
-    bands_df = lsh_bands_portable(
-        sig, "doc_id", num_hashes=num_hashes, bands=bands
-    ).cache()
+    bands_df = _band_index(sh, bands, rows)
     cand = (
         bands_df.alias("x")
         .join(bands_df.alias("y"), ["band", "band_hash"])
@@ -436,26 +509,8 @@ def minhash_pairs_from(
         )
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "h1", "h2")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "h1", "h2")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "h1", "h2"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+        _jaccard(_verify_overlap(cand, sh, "doc_a", "doc_b"))
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     )
@@ -568,12 +623,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the delete/suppress list for tonight's ingest."""
     d = load_table(spark, sf_dir, "documents")
     sh = _capped_shingle_hashes(d).cache()
-    sig = minhash_signature_from_pairs(sh, "doc_id", num_hashes=_MH_HASHES)
-    # cache the band index: delta and base sides both filter it, and
-    # without the cache each side re-runs the signature aggregation
-    bands = lsh_bands_portable(
-        sig, "doc_id", num_hashes=_MH_HASHES, bands=_MH_BANDS
-    ).cache()
+    bands = _band_index(sh, _MH_BANDS, _MH_ROWS)
     delta_bands = bands.where(_is_delta(F.col("doc_id")))
     base_bands = bands.where(~_is_delta(F.col("doc_id")))
     cand = (
@@ -585,30 +635,8 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    a = sh.select(F.col("doc_id").alias("delta_id"), "h1", "h2")
-    b = sh.select(F.col("doc_id").alias("base_id"), "h1", "h2")
-    inter = (
-        cand.join(a, "delta_id")
-        .join(b, ["base_id", "h1", "h2"])
-        .groupBy("delta_id", "base_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = sizes.select(
-        F.col("doc_id").alias("delta_id"), F.col("n_sh").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("base_id"), F.col("n_sh").alias("n_b")
-    )
     return (
-        inter.join(sa, "delta_id")
-        .join(sb, "base_id")
-        .withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+        _jaccard(_verify_overlap(cand, sh, "delta_id", "base_id"))
         .select("delta_id", "base_id", "jaccard")
         .orderBy("delta_id", "base_id")
     )
@@ -682,15 +710,11 @@ def containment_pairs_lsh_from(d: DataFrame) -> DataFrame:
     VLDB 2016).  On these fixtures every containment pair at the
     0.5 threshold has Jaccard >= 0.88 (band collision prob
     1-(1-j^4)^8 > 0.9998), so the banded form matches the exact
-    form row-for-row — asserted against dedup_containment
-    (dedup.py:232, the oracle twin) in tests."""
+    form row-for-row — asserted against :func:`containment_pairs_from`
+    (dedup_containment, the oracle twin) in
+    tests/test_dedup_similarity.py test_containment_lsh_matches_exact."""
     sh = _capped_shingle_hashes(d).cache()
-    sig = minhash_signature_from_pairs(sh, "doc_id", num_hashes=_MH_HASHES)
-    # cache the band index: the candidate self-join consumes it on
-    # both sides (same discipline as dedup_minhash_lsh)
-    bands = lsh_bands_portable(
-        sig, "doc_id", num_hashes=_MH_HASHES, bands=_MH_BANDS
-    ).cache()
+    bands = _band_index(sh, _MH_BANDS, _MH_ROWS)
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), ["band", "band_hash"])
@@ -700,67 +724,7 @@ def containment_pairs_lsh_from(d: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    return _verify_containment(cand, sh)
-
-
-def _verify_containment(cand: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact containment verify shared by every candidate scheme:
-    join the (doc_a < doc_b) candidate pairs to each side's
-    MATERIALIZED shingle-hash set (one array<bigint> row per doc,
-    the two portable hashes packed collision-free into one bigint:
-    h1*2^30 + h2, both < 2^30), count |A n B| with a JVM-side
-    array_intersect, orient contained/container by set size (doc_a
-    on ties — deterministic because pairs are canonical), and apply
-    the threshold.
-
-    Cost is candidate-bounded — only pairs a scheme proposed are
-    scored — and PAIR-SHAPED: one row per candidate carrying two
-    set arrays, instead of the previous row-per-shingle re-join
-    that exploded |cand| x avg-set-size intermediate rows (154 M
-    rows for 609k candidates on the sf0.1 fixture; the array form
-    verifies the same candidates 3x faster cold, 10x warm).  Array
-    payload per row is bounded by document size, the same bound the
-    shingle table itself carries."""
-    docarr = sh.select(
-        "doc_id",
-        (F.col("h1") * F.lit(1 << 30) + F.col("h2")).alias("h"),
-    ).groupBy("doc_id").agg(
-        F.collect_list("h").alias("hs"), F.count("*").alias("n_sh")
-    )
-    pairs = (
-        cand.join(
-            docarr.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("hs").alias("hs_a"),
-                F.col("n_sh").alias("n_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            docarr.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("hs").alias("hs_b"),
-                F.col("n_sh").alias("n_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("n_common", F.size(F.array_intersect("hs_a", "hs_b")))
-    )
-    small_is_a = F.col("n_a") <= F.col("n_b")
-    return (
-        pairs.select(
-            F.when(small_is_a, F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("contained_id"),
-            F.when(small_is_a, F.col("doc_b"))
-            .otherwise(F.col("doc_a"))
-            .alias("container_id"),
-            F.col("n_common").cast("long").alias("n_common"),
-            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
-        )
-        .where(F.col("containment") >= CONTAIN_THRESHOLD)
-        .orderBy("contained_id", "container_id")
-    )
+    return _oriented_containment(_verify_overlap(cand, sh, "doc_a", "doc_b"))
 
 
 def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -849,8 +813,6 @@ def containment_pairs_bottomk_from(d: DataFrame) -> DataFrame:
     Everything is portable hash arithmetic, so the full pipeline —
     probe selection, candidate join, verify — is value-hash
     certified against DuckDB."""
-    from pyspark.sql.window import Window
-
     sh = _capped_shingle_hashes(d).cache()
     wk = Window.partitionBy("doc_id").orderBy("h1", "h2")
     probes = (
@@ -868,7 +830,7 @@ def containment_pairs_bottomk_from(d: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    return _verify_containment(cand, sh)
+    return _oriented_containment(_verify_overlap(cand, sh, "doc_a", "doc_b"))
 
 
 def dedup_containment_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -964,18 +926,8 @@ def ensemble_candidate_parts(
     harness (scripts/stress_skew.py measures the hot-key geometry
     of the postings under the candidate join key).  `ranked` is
     returned cached; callers unpersist it after materializing."""
-    from pyspark.sql.window import Window
-
     ranked = (
-        sh.withColumn(
-            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("h1", "h2")
-            ),
-        )
+        _ranked(sh)
         # floor(log2(n)) via the binary-string length — exact integer
         # arithmetic (see _stratum_case_sum_sql for the float hazard)
         .withColumn("stratum", F.length(F.bin(F.col("n_sh"))) - 1)
@@ -991,9 +943,7 @@ def ensemble_candidate_parts(
             ),
         )
     )
-    probes = ranked.where(
-        F.col("rk") <= F.col("n_sh") - F.ceil(F.lit(t) * F.col("n_sh")) + 1
-    ).select(
+    probes = ranked.where(_in_prefix(t)).select(
         F.col("doc_id").alias("p_doc"),
         F.col("n_sh").alias("p_n"),
         F.col("stratum").alias("q_stratum"),
@@ -1048,7 +998,7 @@ def containment_pairs_ensemble_from(d: DataFrame) -> DataFrame:
       for a because the contained side is never the larger set.
     - Candidates: probes join postings on (q_stratum, h1, h2) with
       the min-side orientation (n, doc_id) tiebreak; the shared
-      exact verify (:func:`_verify_containment`) scores them.
+      exact verify (:func:`_verify_overlap`) scores them.
 
     WHY RECALL IS 1 (prefix lemma with mixed thresholds): for a
     qualifying pair, |A n B| >= ceil(t*|A|) =: alpha_A.  Let c be
@@ -1112,7 +1062,9 @@ def containment_pairs_ensemble_from(d: DataFrame) -> DataFrame:
     # mid-pipeline caches — repeated invocations (parity sweeps,
     # stress ladders, long sessions) must not accumulate cached
     # partitions until an external clearCache (round-7 ADVICE)
-    out = _verify_containment(cand, sh).localCheckpoint(eager=True)
+    out = _oriented_containment(
+        _verify_overlap(cand, sh, "doc_a", "doc_b")
+    ).localCheckpoint(eager=True)
     ranked.unpersist()
     sh.unpersist()
     return out
@@ -1232,23 +1184,9 @@ def dedup_containment_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (delta_id, base_id, n_common, containment) pairs at the
     threshold — the suppress list for tonight's ingest."""
-    from pyspark.sql.window import Window
-
-    t = CONTAIN_THRESHOLD
     d = load_table(spark, sf_dir, "documents")
     sh = _capped_shingle_hashes(d).cache()
-    wk = Window.partitionBy("doc_id").orderBy("h1", "h2")
-    probes = (
-        sh.withColumn(
-            "n_sh", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
-        )
-        .withColumn("_rk", F.row_number().over(wk))
-        .where(
-            F.col("_rk")
-            <= F.col("n_sh") - F.ceil(F.lit(t) * F.col("n_sh")) + 1
-        )
-        .select("doc_id", "h1", "h2")
-    )
+    probes = _ranked(sh).where(_in_prefix(CONTAIN_THRESHOLD))
     is_delta = _is_delta(F.col("doc_id"))
     d_probes = probes.where(is_delta).select(
         F.col("doc_id").alias("delta_id"), "h1", "h2"
@@ -1272,40 +1210,9 @@ def dedup_containment_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # array-set verify (same shape as _verify_containment, keeping
-    # the delta/base orientation instead of contained/container)
-    docarr = sh.select(
-        "doc_id", (F.col("h1") * F.lit(1 << 30) + F.col("h2")).alias("h")
-    ).groupBy("doc_id").agg(
-        F.collect_list("h").alias("hs"), F.count("*").alias("n_sh")
-    )
     return (
-        cand.join(
-            docarr.select(
-                F.col("doc_id").alias("delta_id"),
-                F.col("hs").alias("hs_a"),
-                F.col("n_sh").alias("n_a"),
-            ),
-            "delta_id",
-        )
-        .join(
-            docarr.select(
-                F.col("doc_id").alias("base_id"),
-                F.col("hs").alias("hs_b"),
-                F.col("n_sh").alias("n_b"),
-            ),
-            "base_id",
-        )
-        .withColumn(
-            "n_common", F.size(F.array_intersect("hs_a", "hs_b")).cast("long")
-        )
-        .select(
-            "delta_id",
-            "base_id",
-            "n_common",
-            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
-        )
-        .where(F.col("containment") >= CONTAIN_THRESHOLD)
+        _containment(_verify_overlap(cand, sh, "delta_id", "base_id"))
+        .select("delta_id", "base_id", "n_common", "containment")
         .orderBy("delta_id", "base_id")
     )
 

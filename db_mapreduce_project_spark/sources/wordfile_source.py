@@ -352,36 +352,20 @@ def wordfile_sink_roundtrip(spark, sf_dir: str):
     write+read connector loop against plain SQL word count
     (maprdeuce.cpp:322-329 sink format, 1403-1427 read-back).
 
-    Side-effecting like stream_sink_latest_per_user: a uuid temp
-    dir per invocation, eagerly materialized before cleanup."""
-    import shutil
-    import tempfile
-
+    Side-effecting like the stream_sink_* queries: the sink is
+    written into a scratch dir that lives until interpreter exit
+    (`streaming/jobs.py` `_scratch_dir`), and the returned frame
+    reads it LAZILY — no driver collect of the vocabulary and
+    nothing pinned in the block manager."""
     from ..operators.wordcount import wordcount
+    from ..streaming.jobs import _scratch_dir
 
     register_wordfile_source(spark)
-    root = tempfile.mkdtemp(prefix="wordfile_rt_")
-    out = os.path.join(root, "wc")
-    try:
-        wordcount(spark, sf_dir).write.format("wordfile").mode(
-            "overwrite"
-        ).save(out)
-        # Materialize on the driver before the sink dir is removed.
-        # localCheckpoint would also truncate lineage, but its blocks
-        # are non-fault-tolerant: an executor loss before the caller
-        # consumes the frame would recompute from the deleted files.
-        # The aggregated vocabulary is small by construction (same
-        # bound as write_wordcount_text's coalesce(1)), so a driver
-        # collect is safe here.
-        # read back into pandas, not a list of rows: a pandas frame
-        # becomes a LocalRelation, a list a Python RDD whose every
-        # scan runs Python tasks
-        vocab = (
-            spark.read.format("wordfile").load(out).orderBy("word").toPandas()
-        )
-        return spark.createDataFrame(vocab, schema="word string, cnt bigint")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    out = os.path.join(_scratch_dir("wordfile_rt_"), "wc")
+    wordcount(spark, sf_dir).write.format("wordfile").mode("overwrite").save(
+        out
+    )
+    return spark.read.format("wordfile").load(out).orderBy("word")
 
 
 def _register_roundtrip_query() -> None:

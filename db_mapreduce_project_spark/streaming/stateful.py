@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.stable import duck_qsum, qsum
 from ..io import load_table
 from ..registry import register
-from .jobs import _run_sink, _stream_events
+from .jobs import _run_sink, _state_partitions, _stream_events
 
 QSCALE = 4  # quantize value at 1e-4 — matches stable.qsum(value, 4)
 
@@ -360,15 +360,23 @@ def stream_sink_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash oracle.  Sessions still open (or not yet provably
     closed) at stream end stay in state by design; the oracle
     applies the same final-watermark filter (max event time,
-    ms-truncated as Spark tracks it, minus the 10-minute delay)."""
-    return _run_sink(
-        spark,
-        "stream_sink_sessions",
-        lambda out, ckpt: stream_sessions_to_sink(spark, sf_dir, out, ckpt),
-        lambda out: read_session_sink(spark, out).orderBy(
-            "user_id", "session_start"
-        ),
-    )
+    ms-truncated as Spark tracks it, minus the 10-minute delay).
+
+    State width is scoped to 4 partitions like the other stateful
+    sinks: at the session's 32 every micro-batch runs 32 Python state
+    tasks (sf0.1, `local[4]`: ~17 s at 32 vs ~7 s at 4).  Trailing
+    no-data batches stay on: the sessionizer emits on eviction."""
+    with _state_partitions(spark, 4):
+        return _run_sink(
+            spark,
+            "stream_sink_sessions",
+            lambda out, ckpt: stream_sessions_to_sink(
+                spark, sf_dir, out, ckpt
+            ),
+            lambda out: read_session_sink(spark, out).orderBy(
+                "user_id", "session_start"
+            ),
+        )
 
 
 # Microsecond-exact gap sessionization (matching the stateful

@@ -43,7 +43,8 @@ from db_mapreduce_project_spark.io import load_table
 from db_mapreduce_project_spark.operators.dedup import (
     CONTAIN_THRESHOLD,
     _capped_shingle_hashes,
-    _verify_containment,
+    _oriented_containment,
+    _verify_overlap,
     containment_pairs_from,
     ensemble_candidate_parts,
 )
@@ -113,7 +114,10 @@ def main() -> None:
         .localCheckpoint(eager=True)
     )
     stage("candidates_distinct", cand)
-    stage("verified", _verify_containment(cand, sh))
+    stage(
+        "verified",
+        _oriented_containment(_verify_overlap(cand, sh, "doc_a", "doc_b")),
+    )
     total_sec = round(time.perf_counter() - t_all0, 2)
     ranked.unpersist()
     sh.unpersist()

@@ -14,9 +14,16 @@ def _pairs(df):
 def test_minhash_lsh_recall_vs_exact(spark):
     exact_rows = registry.QUERIES["dedup_ngram_jaccard"](spark, SF).collect()
     exact = {(r["doc_a"], r["doc_b"]) for r in exact_rows}
-    lsh = _pairs(registry.QUERIES["dedup_minhash_lsh"](spark, SF))
+    lsh_rows = registry.QUERIES["dedup_minhash_lsh"](spark, SF).collect()
+    lsh = {(r["doc_a"], r["doc_b"]) for r in lsh_rows}
     # LSH verifies candidates with exact jaccard -> no false positives
     assert lsh <= exact
+    # ... and its array-set verify scores each pair with the exact
+    # form's value, bit for bit
+    exact_j = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in exact_rows}
+    assert lsh_rows
+    for r in lsh_rows:
+        assert r["jaccard"] == exact_j[(r["doc_a"], r["doc_b"])], r
     # banded MinHash at (32 hashes, 8 bands) should surface most
     # true pairs at this threshold
     if exact:

@@ -140,9 +140,7 @@ def test_pq_adc_scores_by_lut_lookup(spark):
     assert ("q_id",) in joins  # the broadcast-LUT join
 
 
-@pytest.mark.parametrize(
-    "name", ["sketch_quantile_hist", "wordfile_sink_roundtrip"]
-)
+@pytest.mark.parametrize("name", ["sketch_quantile_hist"])
 def test_small_driver_tables_are_local_relations(spark, name):
     """Small tables built on the driver come from pandas frames (a
     LocalRelation), not lists of rows: a list becomes a Python RDD,
@@ -150,6 +148,15 @@ def test_small_driver_tables_are_local_relations(spark, name):
     plan = physical_plan(registry.QUERIES[name](spark, SF))
     assert "Scan ExistingRDD" not in plan
     assert "LocalTableScan" in plan
+
+
+def test_wordfile_roundtrip_reads_its_sink_lazily(spark):
+    """wordfile_sink_roundtrip returns a lazy read of the sink it
+    wrote, not a driver table rebuilt from a collect of it."""
+    plan = physical_plan(registry.QUERIES["wordfile_sink_roundtrip"](spark, SF))
+    assert "LocalTableScan" not in plan
+    assert "Scan ExistingRDD" not in plan
+    assert "BatchScan wordfile" in plan, plan
 
 
 def test_wordcount_reads_only_text_column(spark):
@@ -200,6 +207,28 @@ def test_ngram_jaccard_carries_sizes_without_rejoin(spark):
     assert len(joins) == 2, plan
     inner = [j for j in re.findall(r"Join type: (\w+)", plan)]
     assert sorted(set(inner)) == ["Inner", "LeftAnti"], (kinds, inner)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "dedup_incremental_delta",
+        "dedup_containment_lsh",
+        "dedup_containment_bottomk",
+        "dedup_containment_delta",
+    ],
+)
+def test_candidate_verify_is_one_array_intersect(spark, name):
+    """Every candidate scheme scores its pairs with the one array-set
+    verify: one array_intersect per candidate row (not re-evaluated
+    in a join condition), and no row-per-shingle re-join keyed on a
+    doc id together with the (h1, h2) shingle hash."""
+    plan = physical_plan(registry.QUERIES[name](spark, SF))
+    assert plan.count("array_intersect(") == 1, plan
+    joins = _key_sets(plan, "Left keys") | _key_sets(plan, "Right keys")
+    rejoins = [k for k in joins if {"h1", "h2"} < set(k)]
+    assert not rejoins, rejoins
 
 
 def test_q4_is_semi_join(spark):

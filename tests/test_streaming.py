@@ -1342,11 +1342,13 @@ def test_tws_timer_sessionizer_slice_invariant(spark, sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name", sorted(n for n in registry.QUERIES if n.startswith("stream_sink_"))
+    "name",
+    sorted(n for n in registry.QUERIES if n.startswith("stream_sink_"))
+    + ["wordfile_sink_roundtrip"],
 )
 def test_sink_query_leaves_no_persistent_rdd(spark, sf_dir, name):
-    """A sink query returns a lazy read-back of what its stream
-    wrote: once the consumer has materialized it, clearCache()
+    """A sink query returns a lazy read-back of what its stream (or,
+    for wordfile_sink_roundtrip, its batch writer) wrote: once the consumer has materialized it, clearCache()
     leaves the persistent-RDD count where it was before the query
     was built.  `df` stays referenced to the end, so garbage
     collection cannot release a pinned RDD and hide it."""
