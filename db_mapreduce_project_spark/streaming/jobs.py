@@ -41,7 +41,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.stable import duck_qsum, qavg, qsum
 from ..functions.text import normalize_word, tokenize_line
-from ..io import load_table
+from ..io import load_table, parquet_schema
 from ..registry import register
 
 GAP = "5 minutes"
@@ -303,10 +303,10 @@ def stage_events_once(
 ) -> str:
     """Stage the events fixture for the file streaming source ONCE
     and return the directory — the two sides of a stream-stream
-    join read the SAME staged dir instead of each paying the schema
-    read + symlink + sentinel-write jobs (measured ~1s/sink saved
-    at fixture scale; at production scale the source is already a
-    directory and this is moot)."""
+    join read the SAME staged dir instead of each staging its own
+    symlink + sentinel.  Staging reads no schema: the stream that
+    consumes the dir reads it (at production scale the source is
+    already a directory and this is moot)."""
     return _stream_events(
         spark, sf_dir, flush_sentinel=flush_sentinel, stage_only=True
     )
@@ -320,9 +320,10 @@ def _stream_events(
     stage_only: bool = False,
 ) -> DataFrame | str:
     """readStream over the events parquet.  The stream reads the
-    RAW schema and applies the same `ts` normalization as
-    io.load_table (nanos-as-long truncation for TIMESTAMP(NANOS)
-    fixtures, UTC cast for TIMESTAMP_NTZ fixtures).
+    RAW schema from the footer (io.parquet_schema) and applies the
+    same `ts` normalization as io.load_table (nanos-as-long
+    truncation for TIMESTAMP(NANOS) fixtures, UTC cast for
+    TIMESTAMP_NTZ fixtures).
 
     `source_dir` overrides the fixture: a directory of (possibly
     many) parquet files, each arriving as its own micro-batch
@@ -334,7 +335,6 @@ def _stream_events(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if source_dir is None:
         path = os.path.join(sf_dir, "events.parquet")
-        raw_schema = spark.read.parquet(path).schema
         # the file streaming source requires a DIRECTORY of plain
         # files (it does not descend into non-partition subdirs):
         # stage the fixture into a temp dir via symlink (no copy).
@@ -375,12 +375,11 @@ def _stream_events(
                 os.path.join(stage, "zz_flush.parquet"),
             )
     else:
-        stage = source_dir
-        raw_schema = spark.read.parquet(source_dir).schema
+        path = stage = source_dir
     if stage_only:
         return stage
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
@@ -642,11 +641,10 @@ def stream_wordcount(
     (the reference would need a separate incremental implementation).
     State size = vocabulary, bounded regardless of stream length."""
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
     stage = _scratch_dir("docs_stream_")
     os.symlink(path, os.path.join(stage, "documents.parquet"))
     docs = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )

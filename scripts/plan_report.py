@@ -142,6 +142,9 @@ def main() -> int:
             lines.append(f"| {mark} | streaming | | | | | |")
             continue
         info = analyze(physical_plan(registry.QUERIES[name](spark, args.sf)))
+        # a query's leftover cache would stand in for a later query's
+        # plan (InMemoryRelation); isolate rows as bench.py does
+        spark.catalog.clearCache()
         n_analyzed += 1
         lines.append(
             f"| {mark} | {info['exchanges']} | {info['bcast']} | "

@@ -859,3 +859,31 @@ def test_spread_narrow_width_is_default_parallelism(spark, monkeypatch):
     assert _round_robin_widths_under_kernel(guarded) == [width]
     assert guarded.count() == as_is.count()
     assert guarded.exceptAll(as_is).count() == 0
+
+
+def test_query_build_runs_no_job(spark):
+    """Building a query over fixture tables runs no Spark job: each
+    table's schema comes from its parquet footer on the driver
+    (io.parquet_schema), not from Spark's inference job."""
+    from db_mapreduce_project_spark.io import TABLES, load_table
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    group = "build-runs-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        for name in (
+            "q1_pricing_summary",
+            "q5_regional_revenue",
+            "window_moving_sum",
+            "join_asof",
+            "sql_api_revenue",  # register_temp_views: all 10 tables
+        ):
+            registry.QUERIES[name](spark, SF_SMOKE)
+        for name in TABLES:
+            load_table(spark, SF_SMOKE, name)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
